@@ -161,9 +161,10 @@ class AnnIndex:
         DRIFT MONITOR: frozen centroids decay silently on a drifting
         corpus — recall drops with no error anywhere. Each update also
         measures the batch's mean TOP-1 assignment cosine (how well the
-        frozen set still covers the incoming vectors; one extra
-        batch-sized map+agg, O(batch) never O(corpus)) and commits it
-        ATOMICALLY with the merge into the index table's properties:
+        frozen set still covers the incoming vectors; read off the one
+        assignment pass the merge uses, O(batch) never O(corpus)) and
+        commits it ATOMICALLY with the merge into the index table's
+        properties:
         ``ann_drift_baseline_sim`` (first upsert batch — the training-
         era coverage), ``ann_drift_last_sim`` / ``ann_drift_last_n``
         (this batch). ``drift()`` reads them back and trips when
@@ -183,10 +184,15 @@ class AnnIndex:
             F.raise_error(F.concat(
                 F.lit("null op in AnnIndex batch for id "),
                 F.col(idc).cast("string")))))
+        # ONE Arrow assignment pass over the raw batch: the drift stat
+        # and the winners' _cid both read it
+        assign = _ivf_assign_kernel(self._cids, self._cent_mat, 1,
+                                    self.assign_round, with_sim=True)
+        assigned = batch.withColumn("_asg", assign(F.col(self.vec_col)))
         w = Window.partitionBy(idc).orderBy(
             F.col(seq_col).desc(), F.col(op_col).desc(),
             F.col(self.vec_col).desc_nulls_last())
-        winners = (batch.withColumn("_rn", F.row_number().over(w))
+        winners = (assigned.withColumn("_rn", F.row_number().over(w))
                    .where(F.col("_rn") == 1).drop("_rn"))
         idt = self._ID_TYPES[self.id_type].simpleString()
         guard = F.when(
@@ -194,38 +200,10 @@ class AnnIndex:
             .otherwise(F.raise_error(F.concat(
                 F.lit("null embedding in AnnIndex upsert for id "),
                 F.col(idc).cast("string"))))
-        assign = _ivf_assign_kernel(self._cids, self._cent_mat, 1,
-                                    self.assign_round)
         upserts = winners.where(F.col(op_col) != delete_value)
-        props = dict(set_properties or {})
-        # drift stat: only when this batch id is NOT already ledgered —
-        # a replayed batch must stay a cheap no-op (the merge would skip
-        # before running any job, so paying a batch-sized stat action
-        # first would break the replay cost contract). Measured over the
-        # RAW batch's upsert rows (no LWW window pass — duplicate
-        # deliveries are deterministic for a given batch and barely move
-        # a monitoring mean; the ledgered merge alone decides state).
-        snap = self.table.snapshot()
-        if not _ledger_contains(snap["ledger"], str(batch_id),
-                                self.LEDGER_SCOPE):
-            sim_kernel = _ivf_assign_kernel(self._cids, self._cent_mat, 1,
-                                            self.assign_round,
-                                            with_sim=True)
-            stat = (batch.where(F.col(op_col) != delete_value)
-                    .select(sim_kernel(F.col(self.vec_col))["sim"]
-                            .alias("_asim"))
-                    .agg(F.avg("_asim").alias("s"),
-                         F.count(F.lit(1)).alias("n")).collect()[0])
-            if stat["n"]:
-                props["ann_drift_last_sim"] = round(float(stat["s"]), 6)
-                props["ann_drift_last_n"] = int(stat["n"])
-                if "ann_drift_baseline_sim" not in \
-                        snap.get("properties", {}):
-                    props["ann_drift_baseline_sim"] = \
-                        round(float(stat["s"]), 6)
         ups = (quantize_embeddings(upserts, self.vec_col)
                .select(guard.alias(idc),
-                       F.get(assign(F.col(self.vec_col)), 0).alias("_cid"),
+                       F.get(F.col("_asg.ids"), 0).alias("_cid"),
                        "q_vec", "q_scale", "q_norm",
                        F.col(seq_col).cast("long").alias("seq"),
                        F.lit("upsert").alias("_op")))
@@ -237,11 +215,39 @@ class AnnIndex:
             F.lit(None).cast("double").alias("q_norm"),
             F.col(seq_col).cast("long").alias("seq"),
             F.lit(delete_value).alias("_op"))
-        return self.table.merge_batch(
-            ups.unionByName(dels), batch_id, op_col="_op",
-            delete_value=delete_value, batch_compacted=True,
-            ledger_scope=self.LEDGER_SCOPE,
-            set_properties=props or None)
+        props = dict(set_properties or {})
+        # drift stat: only when this batch id is NOT already ledgered —
+        # a replayed batch must stay a cheap no-op (the merge would skip
+        # before running any job, so paying a batch-sized stat action
+        # first would break the replay cost contract). Measured over the
+        # RAW batch's upsert rows (no LWW window pass — duplicate
+        # deliveries are deterministic for a given batch and barely move
+        # a monitoring mean; the ledgered merge alone decides state).
+        # The stat's action fills the cache the merge then reads.
+        snap = self.table.snapshot()
+        fresh = not _ledger_contains(snap["ledger"], str(batch_id),
+                                     self.LEDGER_SCOPE)
+        if fresh:
+            assigned.persist()
+        try:
+            if fresh:
+                stat = (assigned.where(F.col(op_col) != delete_value)
+                        .agg(F.avg("_asg.sim").alias("s"),
+                             F.count(F.lit(1)).alias("n")).collect()[0])
+                if stat["n"]:
+                    props["ann_drift_last_sim"] = round(float(stat["s"]), 6)
+                    props["ann_drift_last_n"] = int(stat["n"])
+                    if "ann_drift_baseline_sim" not in \
+                            snap.get("properties", {}):
+                        props["ann_drift_baseline_sim"] = \
+                            round(float(stat["s"]), 6)
+            return self.table.merge_batch(
+                ups.unionByName(dels), batch_id, op_col="_op",
+                delete_value=delete_value, batch_compacted=True,
+                ledger_scope=self.LEDGER_SCOPE,
+                set_properties=props or None)
+        finally:
+            assigned.unpersist()
 
     def drift(self, *, threshold: float = 0.05) -> dict:
         """Centroid-drift signal from the stats ``update`` maintains:

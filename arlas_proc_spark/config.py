@@ -47,6 +47,11 @@ def build_session(
         # micro-batch cadence; take them an order of magnitude less often
         .config("spark.sql.streaming.stateStore.minDeltasForSnapshot", "30")
         .config("spark.ui.enabled", "false")
+        # PySpark's per-Column call-site capture (a stack walk plus py4j
+        # calls per Column built) was about 1,900 of the 3,200 py4j calls
+        # of a small stream trigger; ingest errors raise with their own
+        # messages, so only the "== DataFrame ==" call-site note is lost
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # local mode = driver-only: the heap must hold every concurrent
         # task's agg/sort state, so size it to the host, not the default 1g
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))

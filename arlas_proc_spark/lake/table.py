@@ -2436,28 +2436,27 @@ class LakeTable(TableIO):
         # (empty table → empty LocalRelation) the join is eliminated
         # entirely, hint and all.
         #
-        # Shuffle-once write: the SHJ already hash-partitions both sides by
-        # the key at P = spark.sql.shuffle.partitions, and HashPartitioning
-        # is exactly the bucket transform (see bucket_expr) — so whenever P
-        # is a multiple of n_buckets, every join output partition holds
-        # EXACTLY one bucket (pmod(h,P)=p ⇒ pmod(h,n)=p mod n) and the
-        # bucketed write below can skip its own repartition: the merged
-        # payload (the widest frame in the pipeline) crosses the wire once
-        # instead of twice per batch, at P/n files per bucket instead of 1.
-        # The explicit repartitions here are absorbed into the join's own
-        # exchanges (verified: one exchange per side, REPARTITION_BY_NUM)
-        # — their real job is the BOOTSTRAP case, where the empty table
-        # side eliminates the join entirely and the incoming repartition is
-        # then the only thing clustering the write.
+        # Shuffle-once write: both join inputs are exchanged by the key hash
+        # at width w, the smallest divisor of n_buckets that is >= P =
+        # spark.sql.shuffle.partitions (n_buckets when none is). The hash
+        # partitioning is exactly the bucket transform (see bucket_expr)
+        # and w | n, so bucket b lands whole in partition b mod w
+        # (pmod(h,w) = pmod(h,n) mod w): every join output task holds
+        # whole buckets and the bucketed write skips its own repartition,
+        # still one file per bucket, the merged payload crossing the wire
+        # once. These exchanges ARE the join's (one per side,
+        # REPARTITION_BY_NUM, never coalesced by AQE); on BOOTSTRAP the
+        # empty table side eliminates the join and the incoming exchange
+        # alone clusters the write. Mid-rebucket the router breaks the
+        # partition↔bucket identity (transitional ids aren't pmod(h, n)),
+        # so that write keeps its repartition.
         p_shuffle = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        # mid-rebucket the router breaks the partition↔bucket identity
-        # (transitional ids aren't pmod(h, n)); correctness never depends
-        # on alignment, but the one-file-per-bucket claim would be false
-        aligned = p_shuffle % n_buckets == 0 and not migrating
+        width = next((w for w in range(p_shuffle, n_buckets)
+                      if n_buckets % w == 0), n_buckets)
         existing = existing.repartition(
-            n_buckets, *[F.col(f"_e_{k}") for k in key_cols])
+            width, *[F.col(f"_e_{k}") for k in key_cols])
         incoming = incoming.repartition(
-            n_buckets, *[F.col(f"_n_{k}") for k in key_cols])
+            width, *[F.col(f"_n_{k}") for k in key_cols])
         j = existing.join(incoming.hint("SHUFFLE_HASH"),
                           on=join_cond, how="full_outer")
 
@@ -2612,14 +2611,14 @@ class LakeTable(TableIO):
             *([_ROW_ID, _LUV] if lineage else []),
             routed_bucket_expr(snap).alias(_BUCKET))
 
-        # 6. write new files for touched buckets (repartition by bucket so
-        #    each bucket lands in few files), then commit atomically
+        # 6. write new files for touched buckets (one file per bucket, see
+        #    the join width above), then commit atomically
         version = snap["version"] + 1
         token = uuid.uuid4().hex[:12]
         staged = self._write_bucket_files(out, version, schema_v, n_buckets,
                                           key_cols=snap["key_cols"],
                                           token=token,
-                                          already_clustered=aligned,
+                                          already_clustered=not migrating,
                                           stats_cols=snap.get("stats_cols"),
                                           bloom_bpk=snap.get("bloom_bits_per_key", 0),
                                           sketch_cols=snap.get("sketch_cols"))
@@ -3366,8 +3365,8 @@ class LakeTable(TableIO):
         commit_dir = f"c{version}-{token}"
         out_dir = os.path.join(self.data_dir, commit_dir)
         if already_clustered:
-            # caller guarantees each incoming partition holds exactly one
-            # bucket (merge join output — see merge_batch); partitionBy
+            # caller guarantees each bucket sits whole in one incoming
+            # partition (merge join output — see merge_batch); partitionBy
             # splits by _BUCKET value anyway, so correctness never depends
             # on this, only file counts do
             clustered = df

@@ -97,7 +97,8 @@ class StreamingIngest:
         session conf — so the conf is lowered for stream startup and
         restored inside the first micro-batch, giving the dedup stage
         ``state_partitions`` stores and the merge its full parallelism
-        (and the P %% n_buckets == 0 shuffle-once write alignment).
+        (and the merge's bucket-aligned join width, the smallest
+        divisor of n_buckets that is >= P).
         Ignored when resuming an existing checkpoint (partitioning is
         already pinned there). ``run_to_completion`` always restores the
         session conf; a continuous ``start()`` stopped before its first

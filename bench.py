@@ -50,8 +50,8 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     n_events = int(os.environ.get("BENCH_EVENTS", "16000000"))
-    rounds = int(os.environ.get("BENCH_ROUNDS",
-                                os.environ.get("BENCH_REPS", "2")))
+    rounds = max(1, int(os.environ.get("BENCH_ROUNDS",
+                                       os.environ.get("BENCH_REPS", "2"))))
     # ~400k distinct keys so the LWW/merge does real per-key work
     GEN = dict(n_repos=200, files_per_repo=2000)
 

@@ -70,9 +70,15 @@ def test_updates_deletes_stale_and_replay_converge(spark, tmp_path):
         "vec_id",
         F.transform("embedding", lambda x: x * F.lit(0.0)).alias("embedding"))
     idx.update(_as_batch(stale, seq0=-1_000_000, op="update"), 3)
-    # a replayed batch id is a no-op
-    assert idx.update(_as_batch(dels, seq0=2_000_000, op="delete"),
-                      2)["skipped"]
+    # a replayed batch id is a no-op that runs no Spark job
+    sc = spark.sparkContext
+    sc.setJobGroup("ann-replay", "replayed AnnIndex batch")
+    try:
+        assert idx.update(_as_batch(dels, seq0=2_000_000, op="delete"),
+                          2)["skipped"]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not sc.statusTracker().getJobIdsForGroup("ann-replay")
     # final corpus state, recomputed from scratch
     final = (e.join(dels.select("vec_id"), "vec_id", "left_anti")
              .join(moved.withColumnRenamed("embedding", "_m"),

@@ -322,6 +322,44 @@ def test_no_quarantine_still_fails_loudly(spark, tmp_path):
         eng.apply_batch(bad, 0)
 
 
+def test_session_disables_call_site_capture(spark):
+    """build_session turns off PySpark's per-Column call-site capture
+    (a stack walk plus a py4j round trip per Column built)."""
+    from pyspark.errors.utils import is_debugging_enabled
+    assert spark.conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()
+
+
+def test_null_key_errors_survive_without_call_site_capture(spark, tmp_path):
+    """With call-site capture off, a null key still fails with its own
+    message on every path: the engine's driver-side flag
+    (CdcEngine.apply_batch), the merge's executor-side raise_error guard
+    (LakeTable.merge_batch), and a StreamingIngest drain."""
+    from pyspark.sql import functions as F
+
+    from arlas_proc_spark.lake.table import LakeTable
+    from arlas_proc_spark.streaming.ingest import StreamingIngest
+    bad = changefeed_df(spark, 50, with_dups=False).withColumn(
+        "repo", F.when(F.col("seq") == 7, F.lit(None))
+        .otherwise(F.col("repo")))
+    eng = CdcEngine(spark, str(tmp_path / "t"), n_buckets=4)
+    with pytest.raises(ValueError, match="null key column in change feed"):
+        eng.apply_batch(bad, 0)
+
+    t = LakeTable(spark, str(tmp_path / "t"))
+    with pytest.raises(Exception,
+                       match="null key column 'repo' in merge batch"):
+        t.merge_batch(bad, 1)
+    assert not t.committed_batch_ids()
+
+    wal = str(tmp_path / "wal")
+    bad.coalesce(1).write.parquet(f"{wal}/batch_00000")
+    ing = StreamingIngest(spark, str(tmp_path / "s"), n_buckets=4)
+    with pytest.raises(Exception, match="null key column"):
+        ing.run_to_completion(wal, str(tmp_path / "ckpt"))
+
+
 def test_two_engines_interleaved_converge(spark, tmp_path):
     """Two engine instances (independent ledger scopes — e.g. two
     redeployed streams) interleave batches into ONE table; the final

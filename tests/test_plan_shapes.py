@@ -112,40 +112,151 @@ def test_lsh_queries_never_plan_cartesian(spark):
             " ", "") in plan.replace(" ", ""), f"{name}: no band-key join"
 
 
-def test_merge_write_is_shuffle_once(spark, tmp_path):
-    """The cow merge's bucketed write must reuse the join's hash
-    partitioning: exactly ONE exchange on each join input and NONE
-    between the join and the write (shuffle.partitions=4 here divides
-    n_buckets=4, the aligned case)."""
-    from pyspark.sql import functions as F
+# a bootstrap batch, then updates, deletes and new keys over it
+_B0 = [(i, "insert", f"r{i % 3}", f"f{i}") for i in range(40)]
+_B1 = ([(100 + i, "update", f"r{i % 3}", f"f{i}") for i in range(0, 40, 3)]
+       + [(200 + i, "delete", f"r{i % 3}", f"f{i}") for i in range(1, 40, 7)]
+       + [(300 + i, "insert", f"r{i % 3}", f"f{i}") for i in range(40, 50)])
 
-    from arlas_proc_spark.lake.table import LakeTable
+
+def _merge_schema():
     import pyspark.sql.types as T
-    schema = T.StructType([
+    return T.StructType([
         T.StructField("repo", T.StringType(), False),
         T.StructField("path", T.StringType(), False),
         T.StructField("commit", T.StringType(), True),
         T.StructField("seq", T.LongType(), True),
         T.StructField("content", T.StringType(), True)])
-    t = LakeTable.create(spark, str(tmp_path / "t"), schema,
+
+
+def _merge_batch_df(spark, rows):
+    """rows: (seq, op, repo, path) — commit and content derive from seq."""
+    return spark.createDataFrame(
+        [(s, op, r, p, f"c{s}", f"v{s}") for s, op, r, p in rows],
+        "seq long, op string, repo string, path string,"
+        " commit string, content string") \
+        .select("repo", "path", "commit", "seq", "content", "op")
+
+
+def _capture_data_writes(monkeypatch) -> list:
+    """Record the physical plan of every frame written under a table's
+    ``data/c*`` commit directory (the merge's bucketed data write)."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+    plans = []
+    orig = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        parent, leaf = os.path.split(str(path).rstrip("/"))
+        if os.path.basename(parent) == "data" and leaf.startswith("c"):
+            plans.append(self._df._jdf.queryExecution().executedPlan())
+        return orig(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    return plans
+
+
+def _write_plan_shape(plan):
+    """(node names above the first exchanges, those exchanges'
+    partitionings, every exchange's partitioning in the plan)."""
+    def kids(p):
+        if p.nodeName() == "AdaptiveSparkPlan":
+            return [p.executedPlan()]
+        ch = p.children()
+        return [ch.apply(i) for i in range(ch.size())]
+
+    top, frontier, every = [], [], []
+    stack = [(plan, True)]
+    while stack:
+        p, above = stack.pop()
+        if p.nodeName() == "Exchange":
+            part = p.outputPartitioning().toString()
+            every.append(part)
+            if above:
+                frontier.append(part)
+            above = False
+        elif above:
+            top.append(p.nodeName())
+        stack.extend((k, above) for k in kids(p))
+    return top, frontier, every
+
+
+def _lww_oracle(batches):
+    state = {}
+    for rows in batches:
+        for s, op, r, p in sorted(rows):
+            if (r, p) not in state or s >= state[(r, p)][0]:
+                state[(r, p)] = (s, op)
+    return sorted((r, p, s, f"v{s}") for (r, p), (s, op) in state.items()
+                  if op != "delete")
+
+
+def _table_state(t):
+    return sorted((r.repo, r.path, r.seq, r.content)
+                  for r in t.read().collect())
+
+
+def test_merge_write_is_shuffle_once(spark, tmp_path, monkeypatch):
+    """The cow merge's bucketed write must reuse the join's hash
+    partitioning: exactly ONE exchange on each join input, keyed by the
+    join keys at width w = the smallest divisor of n_buckets that is
+    >= shuffle.partitions (4 here), and NONE between the join (or, on
+    bootstrap, the incoming exchange) and the write — one file per
+    touched bucket. n_buckets=16 is the width-4 case (4 tasks hold 4
+    whole buckets each); 5 has no divisor in [4, 5) and keeps 5."""
+    from arlas_proc_spark.lake.table import LakeTable
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+    plans = _capture_data_writes(monkeypatch)
+    for n, width in [(4, 4), (16, 4), (5, 5)]:
+        t = LakeTable.create(spark, str(tmp_path / f"t{n}"),
+                             _merge_schema(), ["repo", "path"], "seq",
+                             n_buckets=n)
+        del plans[:]
+        t.merge_batch(_merge_batch_df(spark, _B0), 0)
+        t.merge_batch(_merge_batch_df(spark, _B1), 1)
+        assert len(plans) == 2, n
+        top, frontier, every = _write_plan_shape(plans[0])
+        # bootstrap: the empty table side eliminates the join; the
+        # incoming exchange alone clusters the write
+        assert "ShuffledHashJoin" not in top, (n, top)
+        assert len(frontier) == 1 and "_n_repo" in frontier[0], (n, frontier)
+        assert frontier[0].endswith(f", {width})"), (n, frontier)
+        top, frontier, every = _write_plan_shape(plans[1])
+        assert "ShuffledHashJoin" in top, (n, top)
+        assert sorted(p.split("_")[1] for p in frontier) == ["e", "n"], \
+            (n, frontier)
+        assert all(p.endswith(f", {width})") for p in frontier), \
+            (n, frontier)
+        assert sum("_e_repo" in p for p in every) == 1, (n, every)
+        assert sum("_n_repo" in p for p in every) == 1, (n, every)
+        snap = t.snapshot()
+        files = {b: len(fs) for b, fs in snap["buckets"].items() if fs}
+        assert len(files) > 1 and set(files.values()) == {1}, (n, files)
+        assert _table_state(t) == _lww_oracle([_B0, _B1]), n
+
+
+def test_merge_mid_rebucket_keeps_write_repartition(spark, tmp_path,
+                                                    monkeypatch):
+    """Mid-rebucket the router's transitional ids break the join
+    partition ↔ bucket identity, so that merge's write keeps its own
+    repartition (an exchange between the join and the write) — and the
+    state still equals the LWW oracle."""
+    from arlas_proc_spark.lake.table import LakeTable
+    plans = _capture_data_writes(monkeypatch)
+    t = LakeTable.create(spark, str(tmp_path / "t"), _merge_schema(),
                          ["repo", "path"], "seq", n_buckets=4)
-
-    def batch(rows):
-        return spark.createDataFrame(
-            rows, "seq long, op string, repo string, path string,"
-                  " commit string, content string") \
-            .select("repo", "path", "commit", "seq", "content", "op")
-
-    t.merge_batch(batch([(1, "insert", "r", "a", "c1", "v1"),
-                         (2, "insert", "r", "b", "c2", "v2")]), 0)
-    # incremental merge against non-empty state: bucket files written by
-    # the merge == join output partitions that held rows — never more
-    # than shuffle_partitions total, and a second merge REPLACES (not
-    # grows) each touched bucket's list
-    t.merge_batch(batch([(3, "update", "r", "a", "c3", "v3")]), 1)
-    snap = t.snapshot()
-    total_files = sum(len(fs) for fs in snap["buckets"].values())
-    assert total_files <= 4  # == shuffle partitions cap, no spray
+    t.merge_batch(_merge_batch_df(spark, _B0), 0)
+    t.begin_rebucket(8)
+    assert not t.migrate_buckets(1).get("done")
+    del plans[:]
+    t.merge_batch(_merge_batch_df(spark, _B1), 1)
+    assert len(plans) == 1
+    top, frontier, _ = _write_plan_shape(plans[0])
+    assert "ShuffledHashJoin" not in top, top
+    assert len(frontier) == 1 and "_e_" not in frontier[0] \
+        and "_n_" not in frontier[0], frontier
+    assert _table_state(t) == _lww_oracle([_B0, _B1])
 
 
 def test_change_log_serves_files_without_join(spark, tmp_path):
