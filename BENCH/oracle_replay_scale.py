@@ -73,8 +73,7 @@ def main() -> None:
 
     tmp = tempfile.mkdtemp(prefix="oracle_replay_")
     try:
-        eng = CdcEngine(spark, f"{tmp}/t", n_buckets=cpus,
-                        collect_metrics=False)
+        eng = CdcEngine(spark, f"{tmp}/t", n_buckets=cpus)
         t0 = time.time()
         eng.replay(changefeed_df(spark, n, parallelism=cpus * 2, **GEN))
         out["replay_wall_s"] = round(time.time() - t0, 3)

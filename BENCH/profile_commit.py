@@ -46,8 +46,7 @@ def main() -> None:
     out: dict = {"n_buckets": n_files}
     try:
         # n_buckets = n_files -> the merge commit stages ~n_files files
-        eng = CdcEngine(spark, f"{tmp}/t", n_buckets=n_files,
-                        collect_metrics=False)
+        eng = CdcEngine(spark, f"{tmp}/t", n_buckets=n_files)
         feed = changefeed_df(spark, 2_000_000, parallelism=cpus,
                              n_repos=200, files_per_repo=2000)
         t0 = time.time()

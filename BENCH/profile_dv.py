@@ -56,7 +56,7 @@ def main() -> None:
         tmp = tempfile.mkdtemp(prefix="profile_dv_")
         try:
             base = CdcEngine(spark, f"{tmp}/base", n_buckets=cpus,
-                             collect_metrics=False, write_mode="dv")
+                             write_mode="dv")
             base.replay(changefeed_df(spark, n, parallelism=cpus * 2,
                                       **GEN))
             rows = base.table.count_rows()
@@ -68,7 +68,7 @@ def main() -> None:
                 for mode in ("cow", "dv"):
                     path = f"{tmp}/{mode}{rep}"
                     LakeTable.shallow_clone(spark, f"{tmp}/base", path)
-                    eng = CdcEngine(spark, path, collect_metrics=False,
+                    eng = CdcEngine(spark, path,
                                     write_mode=mode)
                     b0 = _du(path)
                     t0 = time.time()

@@ -39,7 +39,7 @@ stages = {
 }
 def full_replay():
     tmp = tempfile.mkdtemp()
-    eng = CdcEngine(spark, tmp + "/t", n_buckets=cpus, collect_metrics=False)
+    eng = CdcEngine(spark, tmp + "/t", n_buckets=cpus)
     t0 = time.time()
     eng.replay(feed)
     dt = time.time() - t0

@@ -31,14 +31,12 @@ def main() -> None:
 
     tmp = tempfile.mkdtemp(prefix="prof_inc_")
     try:
-        warm = CdcEngine(spark, f"{tmp}/warm", n_buckets=cpus,
-                         collect_metrics=False)
+        warm = CdcEngine(spark, f"{tmp}/warm", n_buckets=cpus)
         warm.replay(changefeed_df(spark, 200_000, parallelism=cpus, **GEN))
 
         best = float("inf")
         for r in range(reps):
-            engine = CdcEngine(spark, f"{tmp}/t{r}", n_buckets=cpus,
-                               collect_metrics=False)
+            engine = CdcEngine(spark, f"{tmp}/t{r}", n_buckets=cpus)
             engine.replay(changefeed_df(spark, n_events,
                                         parallelism=cpus * 2, **GEN))
             inc = changefeed_df(spark, n_events // 10,

@@ -47,7 +47,7 @@ def main() -> None:
         for r in range(rounds):
             for tag, lin in (("plain", False), ("lineage", True)):
                 eng = CdcEngine(spark, f"{tmp}/{tag}{r}", n_buckets=cpus,
-                                collect_metrics=False, row_lineage=lin)
+                                row_lineage=lin)
                 t0 = time.time()
                 for i in range(3):
                     eng.apply_batch(feed.where(feed.seq % 3 == i), i)
@@ -76,7 +76,7 @@ def main() -> None:
             "seq long, op string, repo string, path string, commit string,"
             " ts_s long, lang string, content string")
         eng2 = CdcEngine(spark, keep.path, n_buckets=cpus,
-                         collect_metrics=False, row_lineage=True)
+                         row_lineage=True)
         eng2.apply_batch(upd, "stability-probe")
         after = {(r.repo, r.path): r._row_id
                  for r in keep.read(with_row_ids=True)

@@ -54,7 +54,7 @@ def build(spark, path, bloom):
                   f"cast(id + {g * K} as long) AS seq",
                   f"concat('content-gen{g}-', cast(id as string)) AS content",
                   "'insert' AS op"))
-        t.append_batch(df, g, collect_metrics=False)
+        t.append_batch(df, g)
     return t
 
 

@@ -47,8 +47,7 @@ def main() -> None:
     out: dict = {"n_buckets": n_buckets,
                  "target_files": n_buckets * files_per_bucket}
     try:
-        eng = CdcEngine(spark, f"{tmp}/t", n_buckets=n_buckets,
-                        collect_metrics=False)
+        eng = CdcEngine(spark, f"{tmp}/t", n_buckets=n_buckets)
         feed = changefeed_df(spark, 1_000_000, parallelism=cpus,
                              n_repos=200, files_per_repo=2000)
         t0 = time.time()

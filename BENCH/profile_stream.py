@@ -31,7 +31,7 @@ def main() -> None:
 
         def run(tag, *, dedup, mfpt):
             ing = StreamingIngest(spark, f"{tmp}/t_{tag}", n_buckets=cpus,
-                                  collect_metrics=False, stream_dedup=dedup)
+                                  stream_dedup=dedup)
             t0 = time.time()
             ing.run_to_completion(f"{tmp}/wal", f"{tmp}/ck_{tag}",
                                   max_files_per_trigger=mfpt)

@@ -52,7 +52,7 @@ def main() -> None:
         def drain(tag, **ing_kw):
             calls.clear()
             ing = StreamingIngest(spark, f"{tmp}/t_{tag}", n_buckets=cpus,
-                                  collect_metrics=False, write_mode=mode,
+                                  write_mode=mode,
                                   **ing_kw)
             t0 = time.time()
             q = ing.start(f"{tmp}/wal", f"{tmp}/ck_{tag}",

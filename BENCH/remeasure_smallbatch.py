@@ -43,14 +43,13 @@ def main() -> None:
     walls: dict[str, list[float]] = {k: [] for k in variants}
     try:
         write_changefeed_batches(spark, f"{tmp}/wal", n, n_batches=8, **GEN)
-        warm = CdcEngine(spark, f"{tmp}/warm", n_buckets=cpus,
-                         collect_metrics=False)
+        warm = CdcEngine(spark, f"{tmp}/warm", n_buckets=cpus)
         warm.replay(changefeed_df(spark, 200_000, parallelism=cpus, **GEN))
 
         for r in range(rounds):
             for tag, sp in variants.items():
                 ing = StreamingIngest(spark, f"{tmp}/{tag}{r}",
-                                      n_buckets=cpus, collect_metrics=False,
+                                      n_buckets=cpus,
                                       state_partitions=sp)
                 t0 = time.time()
                 ing.run_to_completion(f"{tmp}/wal", f"{tmp}/ck_{tag}{r}",

@@ -246,7 +246,7 @@ def q_cdc_lake_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full engine path: replay the feed through the snapshot lake table
     (MERGE, tombstones, ledger) and read the final state back."""
     tmp = _scratch_dir("arlas_lake_")
-    engine = CdcEngine(spark, f"{tmp}/table", n_buckets=8, collect_metrics=False)
+    engine = CdcEngine(spark, f"{tmp}/table", n_buckets=8)
     engine.replay(changefeed_df(spark, N_FEED))
     return engine.state().select(
         "repo", "path", "commit", "seq", "ts_s", "lang", "content", "content_sha256")
@@ -259,7 +259,7 @@ def q_cdc_mor_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     same batch oracle as the copy-on-write replay."""
     tmp = _scratch_dir("arlas_mor_")
     engine = CdcEngine(spark, f"{tmp}/table", n_buckets=8,
-                       collect_metrics=False, write_mode="mor")
+                       write_mode="mor")
     feed = changefeed_df(spark, N_FEED)
     half = N_FEED // 2
     engine.apply_batch(feed.where(feed.seq < half), 0)
@@ -280,7 +280,7 @@ def q_cdc_dv_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     sql/WritableDataFrame.scala:83-86)."""
     tmp = _scratch_dir("arlas_dv_")
     engine = CdcEngine(spark, f"{tmp}/table", n_buckets=8,
-                       collect_metrics=False, write_mode="dv")
+                       write_mode="dv")
     feed = changefeed_df(spark, N_FEED)
     for i in range(3):
         engine.apply_batch(feed.where(feed.seq % 3 == i), i)
@@ -303,8 +303,7 @@ def q_cdc_restore_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-back state must equal the same converged oracle as every other
     replay — the incident and its undo leave no trace."""
     tmp = _scratch_dir("arlas_restore_")
-    engine = CdcEngine(spark, f"{tmp}/table", n_buckets=8,
-                       collect_metrics=False)
+    engine = CdcEngine(spark, f"{tmp}/table", n_buckets=8)
     feed = changefeed_df(spark, N_FEED)
     engine.apply_batch(feed.where(feed.seq % 3 == 0), 0)
     engine.apply_batch(feed.where(feed.seq % 3 == 1), 1)
@@ -332,14 +331,13 @@ def q_cdc_branch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-back state must equal the same converged oracle as every other
     replay — the detour through the branch leaves no trace."""
     tmp = _scratch_dir("arlas_branch_")
-    engine = CdcEngine(spark, f"{tmp}/table", n_buckets=8,
-                      collect_metrics=False)
+    engine = CdcEngine(spark, f"{tmp}/table", n_buckets=8)
     feed = changefeed_df(spark, N_FEED)
     engine.apply_batch(feed.where(feed.seq % 4 == 0), 0)
     t = engine.table
     t.create_branch("audit")
     branch_eng = CdcEngine(spark, f"{tmp}/table", n_buckets=8,
-                           collect_metrics=False, branch="audit")
+                           branch="audit")
     branch_eng.apply_batch(feed.where(feed.seq % 4 == 1), 1)
     branch_eng.apply_batch(feed.where(feed.seq % 4 == 2), 2)
     t.fast_forward("audit")
@@ -363,7 +361,7 @@ def q_cdc_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned by tests/test_lake_lineage.py instead."""
     tmp = _scratch_dir("arlas_rowlin_")
     engine = CdcEngine(spark, f"{tmp}/table", n_buckets=8,
-                       collect_metrics=False, row_lineage=True)
+                       row_lineage=True)
     feed = changefeed_df(spark, N_FEED)
     for i in range(3):
         engine.apply_batch(feed.where(feed.seq % 3 == i), i)
@@ -386,13 +384,13 @@ def q_cdc_branch_lineage_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     stored winner — batches 1 and 2 both map to the squash's v2."""
     tmp = _scratch_dir("arlas_brlin_")
     engine = CdcEngine(spark, f"{tmp}/table", n_buckets=8,
-                       collect_metrics=False, row_lineage=True)
+                       row_lineage=True)
     feed = changefeed_df(spark, N_FEED)
     engine.apply_batch(feed.where(feed.seq % 4 == 0), 0)
     t = engine.table
     t.create_branch("audit")
     branch_eng = CdcEngine(spark, f"{tmp}/table", n_buckets=8,
-                           collect_metrics=False, branch="audit")
+                           branch="audit")
     branch_eng.apply_batch(feed.where(feed.seq % 4 == 1), 1)
     branch_eng.apply_batch(feed.where(feed.seq % 4 == 2), 2)
     t.fast_forward("audit")
@@ -411,8 +409,7 @@ def q_cdc_rebucket_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontier — then drain, finalize, and read the final state, which
     must equal the bucketing-invariant converged oracle exactly."""
     tmp = _scratch_dir("arlas_rebucket_")
-    engine = CdcEngine(spark, f"{tmp}/table", n_buckets=8,
-                       collect_metrics=False)
+    engine = CdcEngine(spark, f"{tmp}/table", n_buckets=8)
     feed = changefeed_df(spark, N_FEED)
     third = N_FEED // 3
     engine.apply_batch(feed.where(feed.seq < third), 0)
@@ -443,8 +440,7 @@ def q_cdc_clone_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     untouched (pinned by the clone tag); tests/test_lake_clone.py and
     tests/test_lake_delete_where.py pin those sides."""
     tmp = _scratch_dir("arlas_clone_")
-    engine = CdcEngine(spark, f"{tmp}/table", n_buckets=8,
-                       collect_metrics=False)
+    engine = CdcEngine(spark, f"{tmp}/table", n_buckets=8)
     engine.replay(changefeed_df(spark, N_FEED))
     from arlas_proc_spark.lake.table import LakeTable
     clone = LakeTable.shallow_clone(spark, f"{tmp}/table",
@@ -465,8 +461,7 @@ def q_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     converged final-state oracle under the same predicate (layout can
     only change WHAT IS SCANNED, never the result)."""
     tmp = _scratch_dir("arlas_zorder_")
-    engine = CdcEngine(spark, f"{tmp}/table", n_buckets=4,
-                       collect_metrics=False)
+    engine = CdcEngine(spark, f"{tmp}/table", n_buckets=4)
     engine.replay(changefeed_df(spark, N_FEED))
     t = engine.table
     t.rebucket(4, cluster_by=["lang", "seq"], cluster_mode="zorder",
@@ -485,7 +480,7 @@ def q_cdc_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     must equal the full final-state oracle filtered to that key."""
     tmp = _scratch_dir("arlas_lookup_")
     engine = CdcEngine(spark, f"{tmp}/table", n_buckets=8,
-                       collect_metrics=False, write_mode="mor",
+                       write_mode="mor",
                        bloom_bits_per_key=10)
     feed = changefeed_df(spark, N_FEED)
     for i in range(4):
@@ -527,8 +522,7 @@ def q_cdc_debezium_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = _scratch_dir("arlas_dbz_")
     good, _bad = split_debezium(
         decode_debezium(_debezium_envelopes(spark), _DBZ_ROW_SCHEMA))
-    engine = CdcEngine(spark, f"{tmp}/table", n_buckets=8,
-                       collect_metrics=False)
+    engine = CdcEngine(spark, f"{tmp}/table", n_buckets=8)
     engine.replay(good.select("seq", "op", "repo", "path", "commit",
                               "ts_s", "lang", "content"))
     return engine.state().select(
@@ -553,8 +547,7 @@ def q_debezium_relay(spark: SparkSession, sf_dir: str) -> DataFrame:
                                                    emit_debezium,
                                                    split_debezium)
     tmp = _scratch_dir("arlas_relay_")
-    engine = CdcEngine(spark, f"{tmp}/src", n_buckets=8,
-                       collect_metrics=False)
+    engine = CdcEngine(spark, f"{tmp}/src", n_buckets=8)
     feed = changefeed_df(spark, N_FEED)
     half = N_FEED // 2
     engine.apply_batch(feed.where(feed.seq < half), 0)
@@ -588,8 +581,7 @@ def q_catalog_lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from arlas_proc_spark.lake.catalog import Catalog
     from arlas_proc_spark.lake.table import LakeTable
     tmp = _scratch_dir("arlas_catalog_")
-    engine = CdcEngine(spark, f"{tmp}/src", n_buckets=8,
-                       collect_metrics=False)
+    engine = CdcEngine(spark, f"{tmp}/src", n_buckets=8)
     stats = LakeTable.create(
         spark, f"{tmp}/stats",
         T.StructType([T.StructField("lang", T.StringType(), False),
@@ -654,7 +646,7 @@ def q_cdc_patch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         lo, hi = i * q, (i + 1) * q if i < 3 else N_FEED
         t.merge_batch(
             sparse.where((F.col("seq") >= lo) & (F.col("seq") < hi)),
-            i, patch_cols=["lang", "content"], collect_metrics=False)
+            i, patch_cols=["lang", "content"])
     return t.read().select("repo", "path", "commit", "seq", "ts_s",
                            "lang", "content")
 
@@ -687,7 +679,7 @@ def q_cdc_dv_patch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         lo, hi = i * q, (i + 1) * q if i < 3 else N_FEED
         t.merge_batch(
             sparse.where((F.col("seq") >= lo) & (F.col("seq") < hi)),
-            i, patch_cols=["lang", "content"], collect_metrics=False,
+            i, patch_cols=["lang", "content"],
             dv=True)
         if i == 1:
             t.compact(dv_dead_ratio=0.0001)
@@ -701,8 +693,7 @@ def q_cdc_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     insert/update/delete deltas between the two snapshots — what a
     consumer at v1 must apply to reach v2."""
     tmp = _scratch_dir("arlas_cdf_")
-    engine = CdcEngine(spark, f"{tmp}/table", n_buckets=8,
-                       collect_metrics=False)
+    engine = CdcEngine(spark, f"{tmp}/table", n_buckets=8)
     feed = changefeed_df(spark, N_FEED)
     half = N_FEED // 2
     engine.apply_batch(feed.where(feed.seq < half), 0)   # -> v1
@@ -718,7 +709,7 @@ def q_cdc_replicated(spark: SparkSession, sf_dir: str) -> DataFrame:
     from arlas_proc_spark.streaming.replicate import ChangeLogReplicator
     tmp = _scratch_dir("arlas_repl_")
     engine = CdcEngine(spark, f"{tmp}/src", n_buckets=8,
-                       collect_metrics=False, changefeed=True)
+                       changefeed=True)
     feed = changefeed_df(spark, N_FEED)
     half = N_FEED // 2
     engine.apply_batch(feed.where(feed.seq < half), 0)
@@ -738,7 +729,7 @@ def q_cdc_ivm_lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     never recomputed from the table."""
     tmp = _scratch_dir("arlas_ivm_")
     engine = CdcEngine(spark, f"{tmp}/table", n_buckets=8,
-                       collect_metrics=False, changefeed=True)
+                       changefeed=True)
     view = IncrementalAggView(spark, f"{tmp}/view", engine.table,
                               ["repo", "lang"],
                               {"sum_len": "length(content)"},

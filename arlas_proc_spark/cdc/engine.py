@@ -21,7 +21,7 @@ from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
 from arlas_proc_spark.functions.content import with_content_hash, with_normalized_lang
-from arlas_proc_spark.lake.table import LakeTable
+from arlas_proc_spark.lake.table import LakeTable, lww_argmax
 
 KEY_COLS = ["repo", "path"]
 SEQ_COL = "seq"
@@ -65,7 +65,6 @@ def prepare_events(events: DataFrame, *, vectorized: bool = True,
 class CdcEngine:
     def __init__(self, spark: SparkSession, table_path: str, *,
                  n_buckets: int = 16, vectorized_udfs: bool = True,
-                 collect_metrics: bool = True,
                  broadcast_key_limit: int = 5_000_000,
                  ledger_scope: str = "default",
                  write_mode: str = "cow",
@@ -129,7 +128,6 @@ class CdcEngine:
         self.spark = spark
         self.quarantine_dir = quarantine_dir
         self.vectorized = vectorized_udfs
-        self.collect_metrics = collect_metrics
         self.broadcast_key_limit = broadcast_key_limit
         self.ledger_scope = ledger_scope
         self.commit_retries = 2  # re-merge attempts on ConcurrentCommitError
@@ -339,8 +337,8 @@ class CdcEngine:
             prepared = prepare_events(compacted, vectorized=self.vectorized)
             if self.write_mode == "mor":
                 return self.table.append_batch(
-                    prepared, batch_id, collect_metrics=self.collect_metrics,
-                    batch_compacted=True, ledger_scope=self.ledger_scope,
+                    prepared, batch_id, batch_compacted=True,
+                    ledger_scope=self.ledger_scope,
                     extra_metrics=extra_metrics)
             # optimistic-concurrency retry: a competing writer advancing
             # CURRENT mid-merge raises ConcurrentCommitError AFTER our
@@ -355,7 +353,6 @@ class CdcEngine:
             # merge pipeline; narrower TableIO backends keep the outer
             # re-merge loop.
             merge_kwargs = dict(
-                collect_metrics=self.collect_metrics,
                 assume_all_buckets=assume_all_buckets,
                 touched_buckets=touched,
                 batch_compacted=not self.patch_cols,
@@ -456,9 +453,10 @@ def lww_compact(events: DataFrame, key_cols: list[str] = KEY_COLS,
     shuffle. Use while distinct keys per batch ≲ 10^7 (winner set must
     broadcast).
 
-    strategy='agg': single wide argmax — max(struct(ordering-first,
-    payload)). No join, no broadcast limit; right when the winner set is
-    too large to broadcast (giant replay batches) and cores are few.
+    strategy='agg': single wide argmax — ``lake.table.lww_argmax``, the
+    merge's own in-batch compaction. No join, no broadcast limit; right
+    when the winner set is too large to broadcast (giant replay batches)
+    and cores are few.
 
     ``winners``: optionally a precomputed (persisted) narrow argmax frame
     with columns [*key_cols, seq_col] — lets a caller share one argmax
@@ -474,14 +472,7 @@ def lww_compact(events: DataFrame, key_cols: list[str] = KEY_COLS,
                     f"null key column '{k}' in change feed "
                     f"(key columns are NOT NULL)"))))
     if strategy == "agg":
-        ord_first = [seq_col] + \
-            (["commit"] if "commit" in events.columns else [])
-        ordered = ord_first + \
-            [c for c in events.columns if c not in ord_first]
-        return (events.groupBy(*key_cols)
-                .agg(F.max(F.struct(*ordered)).alias("_w"))
-                .select("_w.*")
-                .select(*events.columns))
+        return lww_argmax(events, key_cols, seq_col)
     if winners is None:
         winners = events.groupBy(*key_cols).agg(F.max(seq_col).alias(seq_col))
     joined = events.join(F.broadcast(winners),

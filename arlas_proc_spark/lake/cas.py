@@ -74,8 +74,9 @@ class CommitCAS:
     def swing_pointer(self, path: str, value: str,
                       expected: str | None = None) -> None:
         """Set pointer ``path`` to ``value``. ``expected=None`` means
-        unconditional (bootstrap). Raises ``CasConflict`` when the
-        pointer does not hold ``expected``."""
+        create-only (bootstrap): it never overwrites an existing pointer.
+        Raises ``CasConflict`` when the pointer does not hold
+        ``expected`` (or, for ``expected=None``, already exists)."""
         raise NotImplementedError
 
     def create_exclusive(self, path: str, body: str) -> None:
@@ -99,10 +100,13 @@ class PosixCAS(CommitCAS):
       a reader could load.
     - ``swing_pointer``: read-compare, then fsynced tmp + ``os.replace``
       + directory fsync (the classic rename-without-fsync power-loss
-      hole, closed). The check-then-rename window is benign in-package:
-      every caller serializes same-version writers through an exclusive
-      create FIRST, so two swings for the same transition cannot both
-      get there — the pointer swing is the publish step, not the lock.
+      hole, closed). The bootstrap swing (``expected=None``) links the
+      tmp into place instead, which fails if the pointer exists — the
+      posix ``If-None-Match: *``. The check-then-rename window is
+      benign in-package: every caller serializes same-version writers
+      through an exclusive create FIRST, so two swings for the same
+      transition cannot both get there — the pointer swing is the
+      publish step, not the lock.
       An object-store implementation gets a true conditional swing from
       the store (see module docstring) and has no window at all."""
 
@@ -129,7 +133,17 @@ class PosixCAS(CommitCAS):
             f.write(value)
             f.flush()
             os.fsync(f.fileno())
-        os.replace(tmp, path)
+        if expected is not None:
+            os.replace(tmp, path)
+        else:
+            try:
+                os.link(tmp, path)
+            except FileExistsError:
+                raise CasConflict(
+                    f"pointer {path} already exists; bootstrap swings are "
+                    f"create-only", found=self.read_pointer(path)) from None
+            finally:
+                os.unlink(tmp)
         dfd = os.open(d, os.O_RDONLY)
         try:
             os.fsync(dfd)

@@ -136,7 +136,6 @@ class IcebergTableIO(TableIO):
     # --- TableIO ---------------------------------------------------------
     def merge_batch(self, batch: DataFrame, batch_id: int | str, *,
                     op_col: str = "op", delete_value: str = "delete",
-                    collect_metrics: bool = True,
                     assume_all_buckets: bool = False,
                     batch_compacted: bool = False,
                     touched_buckets: list[int] | None = None,
@@ -182,7 +181,6 @@ class IcebergTableIO(TableIO):
 
     def append_batch(self, batch: DataFrame, batch_id: int | str, *,
                      op_col: str = "op", delete_value: str = "delete",
-                     collect_metrics: bool = True,
                      batch_compacted: bool = False,
                      ledger_scope: str = "default",
                      extra_metrics: dict | None = None) -> dict:
@@ -191,7 +189,7 @@ class IcebergTableIO(TableIO):
         # append-mode maps onto the same MERGE
         return self.merge_batch(
             batch, batch_id, op_col=op_col, delete_value=delete_value,
-            collect_metrics=collect_metrics, ledger_scope=ledger_scope,
+            ledger_scope=ledger_scope,
             extra_metrics=extra_metrics)
 
     def commit_empty_batch(self, batch_id: int | str,

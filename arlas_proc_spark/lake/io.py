@@ -13,7 +13,10 @@ Contract semantics every implementation must honor (the properties the
 engine's correctness rests on):
 - ``merge_batch`` / ``append_batch``: keyed LWW upsert+delete,
   exactly-once per (ledger_scope, batch_id) — a replayed id is a no-op
-  returning ``{"skipped": True}``;
+  returning ``{"skipped": True}``; the returned metrics (also what
+  ``lineage`` reports) are whatever the backend observes for free — the
+  bundled ``LakeTable`` always counts rows on the write action itself,
+  so there is no switch to turn them off;
 - schema evolution: a batch carrying new/widened columns evolves the
   live schema without rewriting existing data;
 - ``commit_empty_batch``: ledger a data-free batch id (keeps the
@@ -35,22 +38,23 @@ class TableIO(abc.ABC):
     @abc.abstractmethod
     def merge_batch(self, batch: DataFrame, batch_id: int | str, *,
                     op_col: str = "op", delete_value: str = "delete",
-                    collect_metrics: bool = True,
                     assume_all_buckets: bool = False,
                     batch_compacted: bool = False,
                     touched_buckets: list[int] | None = None,
                     ledger_scope: str = "default",
                     extra_metrics: dict | None = None) -> dict:
-        """Copy-on-write keyed MERGE of one change batch."""
+        """Copy-on-write keyed MERGE of one change batch. Returns the
+        batch's metrics (batch id plus row counts where the backend has
+        them)."""
 
     @abc.abstractmethod
     def append_batch(self, batch: DataFrame, batch_id: int | str, *,
                      op_col: str = "op", delete_value: str = "delete",
-                     collect_metrics: bool = True,
                      batch_compacted: bool = False,
                      ledger_scope: str = "default",
                      extra_metrics: dict | None = None) -> dict:
-        """Merge-on-read append of one change batch's winners."""
+        """Merge-on-read append of one change batch's winners. Returns
+        the batch's metrics, like ``merge_batch``."""
 
     @abc.abstractmethod
     def commit_empty_batch(self, batch_id: int | str,

@@ -182,7 +182,6 @@ class IncrementalAggView:
             res = self.table.merge_batch(
                 batch, f"src-{src_v}", batch_compacted=True,
                 touched_buckets=touched, ledger_scope="ivm",
-                collect_metrics=False,
                 additive_cols=[self.count_col, *self.measures],
                 delete_condition=lambda v: v[self.count_col] <= 0,
                 # the cursor advances IN the merge's own snapshot commit —

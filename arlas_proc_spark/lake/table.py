@@ -1121,36 +1121,22 @@ class LakeTable(TableIO):
                                     with_row_ids=lineage),
                           key_cols, snap["seq_col"])
         sort_cols, stats_cols = _clustered_layout(
-            snap, cluster_by, df.columns, cluster_mode=cluster_mode)
-        if cluster_by and cluster_mode == "zorder":
-            from arlas_proc_spark.lake.zorder import zorder_expr
-            sort_cols = [zorder_expr(df, list(cluster_by))]
+            snap, cluster_by, df, cluster_mode=cluster_mode)
         out = df.withColumn(_BUCKET, bucket_expr(key_cols, new_n_buckets))
-        version = snap["version"] + 1
-        schema_v = max(int(v) for v in snap["schemas"])
         token = uuid.uuid4().hex[:12]
-        staged = self._write_bucket_files(out, version, schema_v,
-                                          new_n_buckets, key_cols=key_cols,
-                                          token=token, sort_cols=sort_cols,
-                                          stats_cols=stats_cols,
-                                          bloom_bpk=snap.get("bloom_bits_per_key", 0),
-                                          sketch_cols=snap.get("sketch_cols"),
-                                          max_records_per_file=target_rows_per_file)
-        self._assign_row_ranges(snap, staged)
+        staged = self._write_bucket_files(
+            snap, out, token, n_buckets=new_n_buckets, sort_cols=sort_cols,
+            stats_cols=stats_cols, max_records_per_file=target_rows_per_file)
         snap["buckets"] = {str(b): fs for b, fs in staged.items()}
         snap["mor_buckets"] = []
         snap["n_buckets"] = new_n_buckets
         # a full rewrite supersedes any in-progress incremental rebucket
         snap.pop("rebucket", None)
-        # logical no-op for the change log, like compaction
-        snap["changes"] = {"version": version, "files": [],
-                           "schema_v": schema_v, "rows": 0}
-        snap["version"] = version
         metrics = {"batch_id": bid, "rebucketed_to": new_n_buckets}
-        _ledger_add(snap["ledger"], bid, metrics)
-        self._record_lineage(snap, self._write_lineage(version, bid, staged,
-                                                       token=token))
-        self._commit_snapshot(snap, expected_version=version - 1)
+        # logical no-op for the change log, like compaction
+        self._commit_stage(snap, staged, bid, metrics, token=token,
+                           changes=_noop_changes(snap))
+        self._publish(snap)
         return metrics
 
     def begin_rebucket(self, to_n_buckets: int) -> dict:
@@ -1245,20 +1231,13 @@ class LakeTable(TableIO):
                        with_row_ids=bool(snap.get("row_lineage")))
         out = df.withColumn(_BUCKET,
                             bucket_expr(key_cols, to_n) + F.lit(int(n)))
-        version = snap["version"] + 1
-        schema_v = max(int(v) for v in snap["schemas"])
         token = uuid.uuid4().hex[:12]
         # repartition(to_n, keys) partitions by pmod(hash(key), to_n) —
         # exactly the new-spec transform — so each task writes exactly
         # one transitional bucket (same alignment trick as merge_batch)
         staged = self._write_bucket_files(
-            out, version, schema_v, to_n,
-            key_cols=key_cols, token=token,
-            stats_cols=snap.get("stats_cols"),
-            bloom_bpk=snap.get("bloom_bits_per_key", 0),
-            sketch_cols=snap.get("sketch_cols"),
+            snap, out, token, n_buckets=to_n,
             max_records_per_file=target_rows_per_file)
-        self._assign_row_ranges(snap, staged)
         for b in step:
             if str(b) in snap["buckets"]:
                 del snap["buckets"][str(b)]
@@ -1284,18 +1263,14 @@ class LakeTable(TableIO):
         else:
             snap["rebucket"] = {"to_n": to_n, "frontier": new_frontier}
         snap["mor_buckets"] = sorted(mor, key=int)
-        # migration never changes logical state: a change-log no-op
-        snap["changes"] = {"version": version, "schema_v": schema_v,
-                           "files": [], "rows": 0}
-        snap["version"] = version
         metrics = {"batch_id": bid, "migrated_buckets": len(step),
                    "frontier": new_frontier if not done else n,
                    "done": done,
                    "wall_s": round(time.time() - t0, 3)}
-        _ledger_add(snap["ledger"], bid, metrics)
-        self._record_lineage(snap, self._write_lineage(version, bid, staged,
-                                                       token=token))
-        self._commit_snapshot(snap, expected_version=version - 1)
+        # migration never changes logical state: a change-log no-op
+        self._commit_stage(snap, staged, bid, metrics, token=token,
+                           changes=_noop_changes(snap))
+        self._publish(snap)
         return metrics
 
     def read_version(self, version: int,
@@ -1420,28 +1395,28 @@ class LakeTable(TableIO):
         raise last_err
 
     # --------------------------------------------------- metadata commits
-    def _metadata_commit(self, mutate) -> dict:
-        """Retried metadata-only commit (tags, config flags). Each of 4
-        attempts re-reads the snapshot fresh and applies
+    def _metadata_commit(self, mutate, branch: str | None = None) -> dict:
+        """Retried metadata-only commit (tags, config flags, empty
+        batches). Each of 4 attempts re-reads the snapshot (the
+        ``branch`` head when given) fresh and applies
         ``mutate(snap) -> (result, commit)``: mutate edits ``snap`` in
         place and returns the caller-facing result plus whether a commit
         is needed (``False`` short-circuits — the no-op case). On commit,
         the version bumps and an EMPTY ``changes`` entry is stamped so
-        CDF tailers see a data-free version step instead of a log gap."""
+        CDF tailers see a data-free version step instead of a log gap.
+        No data file is written, so no lineage file either; only the
+        publish step is shared with the data writers."""
         last_err: Exception | None = None
         for _ in range(4):
-            snap = self.snapshot()
+            snap = self._branch_head(branch) if branch is not None \
+                else self.snapshot()
             result, commit = mutate(snap)
             if not commit:
                 return result
+            snap["changes"] = _noop_changes(snap)
             snap["version"] += 1
-            snap["changes"] = {"version": snap["version"], "files": [],
-                               "schema_v": max(int(x)
-                                               for x in snap["schemas"]),
-                               "rows": 0}  # logical no-op for the feed
             try:
-                self._commit_snapshot(snap,
-                                      expected_version=snap["version"] - 1)
+                self._publish(snap, branch=branch)
                 return result
             except ConcurrentCommitError as e:
                 last_err = e
@@ -1527,7 +1502,7 @@ class LakeTable(TableIO):
             new_schema = StructType([
                 StructField(new, f.dataType, f.nullable, f.metadata)
                 if f.name == old else f for f in schema.fields])
-            sv = max(int(v) for v in snap["schemas"]) + 1
+            sv = _schema_v(snap) + 1
             snap["schemas"][str(sv)] = json.loads(new_schema.json())
             snap["schema"] = json.loads(new_schema.json())
             log = list(snap.get("rename_log", []))
@@ -1576,7 +1551,7 @@ class LakeTable(TableIO):
             _check_retired_names([name], snap)
             new_schema = StructType(list(schema.fields) +
                                     [StructField(name, dtype, True)])
-            sv = max(int(v) for v in snap["schemas"]) + 1
+            sv = _schema_v(snap) + 1
             snap["schemas"][str(sv)] = json.loads(new_schema.json())
             snap["schema"] = json.loads(new_schema.json())
             return {"added": {"name": name,
@@ -1622,7 +1597,7 @@ class LakeTable(TableIO):
                                  f"column")
             new_schema = StructType([f for f in schema.fields
                                      if f.name != name])
-            sv = max(int(v) for v in snap["schemas"]) + 1
+            sv = _schema_v(snap) + 1
             snap["schemas"][str(sv)] = json.loads(new_schema.json())
             snap["schema"] = json.loads(new_schema.json())
             log = list(snap.get("drop_log", []))
@@ -2000,9 +1975,7 @@ class LakeTable(TableIO):
             if self._bucket_token(base, str(b)) != \
                     self._bucket_token(cur, str(b)):
                 return None
-        new_version = int(cur["version"]) + 1
-        reb = {k: v for k, v in cur.items() if k != "buckets"}
-        reb["buckets"] = cur["buckets"]
+        reb = dict(cur)
         snap_b = ctx["snap"]["buckets"]
         for b in ctx["touched"]:
             reb["buckets"][str(b)] = snap_b[str(b)]
@@ -2014,34 +1987,22 @@ class LakeTable(TableIO):
             reb["mor_buckets"] = sorted(
                 (x for x in {str(m) for m in cur.get("mor_buckets", [])}
                  if x not in ts), key=int)
-        if ctx["set_properties"]:
-            props = dict(cur.get("properties", {}))
-            props.update(ctx["set_properties"])
-            reb["properties"] = props
         entry = ctx["snap"].get("changes")
         if entry is not None:
             # change FILES need no rewrite: read_change_log reads them
             # under a pinned schema and stamps _change_version from the
             # snapshot entry, so re-pointing the entry at the rebased
             # version relabels every transition correctly
-            entry = dict(entry)
-            entry["version"] = new_version
-            reb["changes"] = entry
-        else:
-            reb.pop("changes", None)
-        led = copy.deepcopy(cur["ledger"])
-        metrics = dict(ctx["metrics"])
-        metrics["rebased_commit"] = True
-        metrics["rebased_over_versions"] = \
-            int(cur["version"]) - int(ctx["base_version"])
-        _ledger_add(led, bid, metrics, scope)
-        reb["ledger"] = led
+            entry = {**entry, "version": int(cur["version"]) + 1}
+        reb["ledger"] = copy.deepcopy(cur["ledger"])
         reb["lineage_files"] = list(cur.get("lineage_files", []))
-        self._record_lineage(
-            reb, self._write_lineage(new_version, bid, ctx["staged"],
-                                     token=ctx["token"]))
-        reb["version"] = new_version
-        self._commit_snapshot(reb, expected_version=int(cur["version"]))
+        metrics = {**ctx["metrics"], "rebased_commit": True,
+                   "rebased_over_versions":
+                       int(cur["version"]) - int(ctx["base_version"])}
+        self._commit_stage(reb, ctx["staged"], bid, metrics,
+                           token=ctx["token"], changes=entry, scope=scope,
+                           set_properties=ctx["set_properties"])
+        self._publish(reb)
         return metrics
 
     def delete_where(self, condition, batch_id: int | str, *,
@@ -2104,7 +2065,6 @@ class LakeTable(TableIO):
     def _merge_batch_attempt(
             self, batch: DataFrame, batch_id: int | str, *,
             op_col: str = "op", delete_value: str = "delete",
-            collect_metrics: bool = True,
             assume_all_buckets: bool = False,
             batch_compacted: bool = False,
             touched_buckets: list[int] | None = None,
@@ -2120,6 +2080,20 @@ class LakeTable(TableIO):
             dv_prune: str | None = "auto",
             _rebase_ctx: dict | None = None) -> dict:
         """Exactly-once keyed MERGE (upsert + delete) of a change batch.
+
+        The merge runs six stages, one method each; every option below
+        is a choice made inside one of them:
+
+        1. validate + evolve (:meth:`_merge_validate`);
+        2. resolve: in-batch LWW compaction, patch fold
+           (:meth:`_merge_resolve`);
+        3. locate: touched buckets, current state, dv prune
+           (:meth:`_merge_locate`);
+        4. join: the winner rule plus the dv, row-lineage and change-feed
+           columns (:meth:`_merge_join`);
+        5. write: data files, dv mask, change files (:meth:`_merge_write`);
+        6. commit: ledger, lineage, properties (:meth:`_commit_stage`),
+           then the CAS, WAP stage or branch append (:meth:`_publish`).
 
         ``dv=True``: DELETION-VECTOR merge (Delta deletion vectors /
         Iceberg v2 positional deletes). Identical logical semantics to
@@ -2156,7 +2130,9 @@ class LakeTable(TableIO):
 
         ``extra_metrics``: caller-supplied metrics (e.g. quarantine
         counts) folded into the batch's ledger entry so they are visible
-        through ``lineage()``.
+        through ``lineage()``. The entry always carries the merge's own
+        counts (``rows_upserted``, ``rows_deleted``, ``keys_considered``),
+        observed on the write action itself.
 
         ``set_properties``: table properties committed ATOMICALLY with
         this merge (Iceberg snapshot-summary-property pattern; persisted
@@ -2238,26 +2214,109 @@ class LakeTable(TableIO):
         if _ledger_contains(led, bid, ledger_scope):
             return {"batch_id": bid, "skipped": True,
                     **led["metrics"].get(_ledger_key(ledger_scope, bid), {})}
-
         t0 = time.time()
-        key_cols, seq_col = snap["key_cols"], snap["seq_col"]
-        n_buckets = snap["n_buckets"]
+        fold = dict(op_col=op_col, delete_value=delete_value,
+                    patch_cols=patch_cols)
+        schema, changed = self._merge_validate(
+            snap, batch, additive_cols=additive_cols,
+            batch_compacted=batch_compacted, **fold)
+        tagged, resolved = self._merge_resolve(
+            snap, batch, batch_compacted=batch_compacted, **fold)
+        touched, cur = self._merge_locate(
+            snap, tagged, resolved, touched_buckets=touched_buckets,
+            assume_all_buckets=assume_all_buckets, dv=dv, dv_prune=dv_prune)
+        merged = self._merge_join(
+            snap, schema, resolved, cur, additive_cols=additive_cols,
+            delete_condition=delete_condition, dv=dv, **fold)
+        metrics = {"batch_id": bid, "buckets_touched": len(touched),
+                   **(extra_metrics or {})}
+        token = uuid.uuid4().hex[:12]
+        staged, changes = self._merge_write(
+            snap, schema, merged, touched, metrics, token=token, dv=dv,
+            staged_changes=wap_id is not None or branch is not None)
+        metrics["wall_s"] = round(time.time() - t0, 3)
+        self._commit_stage(snap, staged, bid, metrics, token=token,
+                           changes=changes, scope=ledger_scope,
+                           set_properties=set_properties)
+        try:
+            self._publish(snap, wap_id=wap_id, branch=branch)
+        except ConcurrentCommitError:
+            # a lost CAS on main leaves every staged file valid work: hand
+            # merge_batch what a metadata-only rebase needs — UNLESS this
+            # commit depends on table state beyond its touched buckets
+            # (schema evolution pins a new global schema; delete_condition
+            # evaluated victims against the stale snapshot; an active
+            # rebucket frontier routes keys), where only a full re-merge
+            # is sound
+            if (_rebase_ctx is not None and wap_id is None
+                    and branch is None and not changed
+                    and not _mid_rebucket(snap) and delete_condition is None):
+                _rebase_ctx.update(
+                    armed=True, snap=snap, base_version=snap["version"] - 1,
+                    touched=[int(b) for b in touched], staged=staged,
+                    token=token, bid=bid, ledger_scope=ledger_scope,
+                    metrics=metrics, set_properties=set_properties, dv=dv)
+            raise
+        if wap_id is not None:
+            metrics["staged_wap"] = wap_id
+        elif branch is not None:
+            metrics["branch"] = branch
+        return metrics
 
-        # a key column entirely ABSENT from the batch would merge every
-        # row under a null key — fail loudly up front (the per-row guard
-        # below covers null VALUES in present columns)
-        missing_keys = [k for k in key_cols if k not in batch.columns]
-        if missing_keys:
+    @staticmethod
+    def _evolve_stage(snap: dict, batch: DataFrame,
+                      op_col: str | None = None) -> tuple[StructType, bool]:
+        """The validate + evolve stage every writer that takes a batch
+        shares: every key column must be present (an ABSENT key column
+        would write every row under a null key; the per-row guard in
+        :func:`_batch_col` covers null VALUES), no batch column may carry
+        a renamed-away name, and the batch's data columns (all but
+        ``op_col``) evolve the live schema — a new schema version in
+        ``snap``. Returns (table schema, evolved)."""
+        missing = [k for k in snap["key_cols"] if k not in batch.columns]
+        if missing:
             raise ValueError(
-                f"batch is missing key column(s) {missing_keys}; key "
+                f"batch is missing key column(s) {missing}; key "
                 f"columns are required on every batch")
+        _check_retired_names(batch.columns, snap)
+        schema, changed = evolve_schema(
+            StructType.fromJson(snap["schema"]),
+            StructType([f for f in batch.schema.fields
+                        if f.name != op_col]))
+        if changed:
+            schema_v = _schema_v(snap) + 1
+            snap["schemas"][str(schema_v)] = json.loads(schema.json())
+            snap["schema"] = json.loads(schema.json())
+        return schema, changed
 
+    def _merge_validate(self, snap: dict, batch: DataFrame, *, op_col: str,
+                        delete_value: str, patch_cols: list[str] | None,
+                        additive_cols: list[str] | None,
+                        batch_compacted: bool) -> tuple[StructType, bool]:
+        """Merge stage 1: the shared validate + evolve stage
+        (:meth:`_evolve_stage`), then the merge's own refusals — a data
+        column shadowing ``op_col``, an invalid ``patch_cols`` set,
+        batch-fed row-lineage columns. Returns (table schema, evolved)."""
+        schema, changed = self._evolve_stage(snap, batch, op_col)
+        if op_col in schema.fieldNames():
+            # a DATA column named like the op marker makes the join's
+            # _n_-prefixed projection ambiguous — fail with the cause
+            # instead of an AMBIGUOUS_REFERENCE analysis error. (Usually
+            # the table was loaded via overwrite() from an EVENT-shaped
+            # frame whose op column evolved into the schema.)
+            raise ValueError(
+                f"table schema contains a data column named {op_col!r}, "
+                f"which collides with this merge's op_col; pass a "
+                f"different op_col (or rebuild the table without the "
+                f"column — overwrite() loads STATE rows, so event frames "
+                f"should drop their op column first)")
         if patch_cols:
             if batch_compacted:
                 raise ValueError(
                     "patch_cols requires the merge's own in-batch fold; "
                     "batch_compacted=True bypasses it")
-            reserved = set(key_cols) | {seq_col, op_col, "commit"}
+            reserved = set(snap["key_cols"]) | {snap["seq_col"], op_col,
+                                                "commit"}
             bad = [c for c in patch_cols if c in reserved]
             if bad:
                 raise ValueError(
@@ -2271,56 +2330,87 @@ class LakeTable(TableIO):
             if overlap:
                 raise ValueError(
                     f"columns cannot be both additive and patch: {overlap}")
+        if snap.get("row_lineage"):
+            bad = [c for c in (_ROW_ID, _LUV) if c in batch.columns]
+            if bad:
+                raise ValueError(
+                    f"batch carries reserved row-lineage column(s) {bad}: "
+                    f"ids are table-assigned, never fed in")
+        return schema, changed
 
-        # 1. schema evolution: batch columns (minus op) vs live schema
-        batch_data_schema = StructType(
-            [f for f in batch.schema.fields if f.name != op_col])
-        table_schema = StructType.fromJson(snap["schema"])
-        if op_col in {f.name for f in table_schema.fields}:
-            # a DATA column named like the op marker makes the merge's
-            # _n_-prefixed projection ambiguous — fail with the cause
-            # instead of an AMBIGUOUS_REFERENCE analysis error. (Usually
-            # the table was loaded via overwrite() from an EVENT-shaped
-            # frame whose op column evolved into the schema.)
-            raise ValueError(
-                f"table schema contains a data column named {op_col!r}, "
-                f"which collides with this merge's op_col; pass a "
-                f"different op_col (or rebuild the table without the "
-                f"column — overwrite() loads STATE rows, so event frames "
-                f"should drop their op column first)")
-        _check_retired_names(batch.columns, snap)
-        new_schema, changed = evolve_schema(table_schema, batch_data_schema)
-        schema_v = max(int(v) for v in snap["schemas"]) if snap["schemas"] else 0
-        if changed:
-            schema_v += 1
-            snap["schemas"][str(schema_v)] = json.loads(new_schema.json())
-            snap["schema"] = json.loads(new_schema.json())
-            table_schema = new_schema
-        base_metrics = dict(extra_metrics or {})
+    @staticmethod
+    def _merge_resolve(snap: dict, batch: DataFrame, *, op_col: str,
+                       delete_value: str, patch_cols: list[str] | None,
+                       batch_compacted: bool) -> tuple[DataFrame, DataFrame]:
+        """Merge stage 2: tag every event with its routed bucket, then
+        compact to one row per key (the join needs unique keys on both
+        sides) with the wide LWW argmax — safe at any size, no broadcast
+        limit — unless the caller already did. Returns (tagged, resolved):
+        bucket discovery reads the uncompacted ``tagged``.
 
-        # 2. touched buckets (tiny aggregation: ≤ n_buckets groups, map-side
-        #    partials — no wide shuffle). Full-log replays skip the scan
-        #    entirely (assume_all_buckets); callers that already know the
-        #    set (CdcEngine derives it from the narrow argmax winners) pass
-        #    ``touched_buckets`` so the batch plan is consumed exactly once.
-        migrating = bool(snap.get("rebucket", {}).get("frontier"))
-        resolved = batch.withColumn(_BUCKET, routed_bucket_expr(snap))
-        if migrating:
-            # mid-rebucket, caller-computed touched sets (engine/IVM use
-            # the plain old-spec transform) don't know the router —
-            # recompute from the routed ids; a full replay must rewrite
-            # every bucket the manifest currently has
-            ids = {r[0] for r in
-                   resolved.select(_BUCKET).distinct().collect()}
+        With ``patch_cols`` the same aggregation pass also folds, per key,
+        (a) the latest in-batch delete's (seq, commit) and (b) per patch
+        column the latest non-null value's (seq, commit, value). The
+        latest non-null overall IS the latest non-null after the delete
+        whenever it ranks above the delete, so one max per column
+        suffices — no second pass, no window."""
+        tagged = batch.withColumn(_BUCKET, routed_bucket_expr(snap))
+        if batch_compacted:
+            return tagged, tagged
+        key_cols, seq_col = snap["key_cols"], snap["seq_col"]
+        if not patch_cols:
+            return tagged, lww_argmax(tagged, key_cols, seq_col)
+        rank = [F.col(seq_col).alias("s"),
+                (F.col("commit") if "commit" in tagged.columns
+                 else F.lit("")).alias("c")]
+        folds = {"_ld": F.max(F.when(F.col(op_col) == F.lit(delete_value),
+                                     F.struct(*rank)))}
+        for c in patch_cols:
+            folds[f"_pf_{c}"] = F.max(F.when(
+                F.col(c).isNotNull(), F.struct(*rank, F.col(c).alias("v"))))
+        compacted = lww_argmax(tagged, key_cols, seq_col, folds)
+
+        def _folded(c):
+            p = F.col(f"_pf_{c}")
+            live = F.col("_ld").isNull() | (
+                F.struct(p["s"].alias("s"), p["c"].alias("c"))
+                > F.col("_ld"))
+            return F.when(p.isNotNull() & live, p["v"])
+        return tagged, compacted.select(
+            *[(_folded(c) if c in patch_cols else F.col(c)).alias(c)
+              for c in tagged.columns],
+            F.col("_ld").isNotNull().alias("_had_del"))
+
+    def _merge_locate(self, snap: dict, tagged: DataFrame,
+                      resolved: DataFrame, *,
+                      touched_buckets: list[int] | None,
+                      assume_all_buckets: bool, dv: bool,
+                      dv_prune: str | None) -> tuple[list[int], DataFrame]:
+        """Merge stage 3: the touched buckets and the current state of
+        exactly those (tombstones included — they out-rank later-arriving
+        stale inserts). Returns (touched, current state).
+
+        Bucket discovery is a tiny aggregation (≤ n_buckets groups,
+        map-side partials, no wide shuffle). Full-log replays skip it
+        (``assume_all_buckets``); callers that already know the set
+        (CdcEngine derives it from the narrow argmax winners) pass
+        ``touched_buckets`` so the batch plan is consumed exactly once.
+        Mid-rebucket, caller-computed sets (engine and IVM use the plain
+        old-spec transform) don't know the router, so discovery always
+        runs over the routed ids, and a full replay also rewrites every
+        bucket the manifest currently has."""
+        if _mid_rebucket(snap):
+            ids = {r[0] for r in tagged.select(_BUCKET).distinct().collect()}
             if assume_all_buckets:
                 ids |= {int(b) for b in snap["buckets"]}
             touched = sorted(ids)
         elif assume_all_buckets:
-            touched = list(range(n_buckets))
+            touched = list(range(snap["n_buckets"]))
         elif touched_buckets is not None:
             touched = list(touched_buckets)
         else:
-            touched = [r[0] for r in resolved.select(_BUCKET).distinct().collect()]
+            touched = [r[0] for r in
+                       tagged.select(_BUCKET).distinct().collect()]
         if dv:
             bad = sorted(set(int(b) for b in touched) &
                          {int(b) for b in snap.get("mor_buckets", [])})
@@ -2329,62 +2419,9 @@ class LakeTable(TableIO):
                     f"dv=True cannot merge into merge-on-read bucket(s) "
                     f"{bad}: generations there resolve by read-time LWW, "
                     f"not positions; compact() them first")
-
-        # 4. compact the batch to one row per key (LWW by seq desc, commit
-        #    desc) unless the caller already did — the join below requires
-        #    unique keys on both sides. Wide argmax: safe at any size, no
-        #    broadcast limit (the caller's fast path is narrower).
-        if not batch_compacted:
-            ord_first = [seq_col] + (["commit"] if "commit" in resolved.columns else [])
-            ordered = ord_first + [c for c in resolved.columns if c not in ord_first]
-            aggs = [F.max(F.struct(*ordered)).alias("_w")]
-            if patch_cols:
-                # event-level fold (see docstring): alongside the winner
-                # row, the SAME aggregation pass carries (a) the latest
-                # in-batch delete's (seq, commit) and (b) per patch column
-                # the latest non-null value's (seq, commit, value). The
-                # latest-non-null-overall IS the latest-non-null-after-the-
-                # delete whenever it ranks above the delete, so one max per
-                # column suffices — no second pass, no window.
-                ok = [F.col(seq_col).alias("s"),
-                      (F.col("commit") if "commit" in resolved.columns
-                       else F.lit("")).alias("c")]
-                aggs.append(F.max(F.when(
-                    F.col(op_col) == F.lit(delete_value),
-                    F.struct(*ok))).alias("_ld"))
-                for c in patch_cols:
-                    aggs.append(F.max(F.when(
-                        F.col(c).isNotNull(),
-                        F.struct(*ok, F.col(c).alias("v"))))
-                        .alias(f"_pf_{c}"))
-            compacted = resolved.groupBy(*key_cols).agg(*aggs)
-            if patch_cols:
-                def _folded(c):
-                    p = F.col(f"_pf_{c}")
-                    rank = F.struct(p["s"].alias("s"), p["c"].alias("c"))
-                    live = F.col("_ld").isNull() | (rank > F.col("_ld"))
-                    return F.when(p.isNotNull() & live, p["v"])
-                resolved = compacted.select(
-                    *[(_folded(c) if c in patch_cols
-                       else F.col(f"_w.{c}")).alias(c)
-                      for c in resolved.columns],
-                    F.col("_ld").isNotNull().alias("_had_del"))
-            else:
-                resolved = compacted.select("_w.*").select(*resolved.columns)
-
-        # 5. MERGE: current state (incl. delete tombstones — they out-rank
-        #    later-arriving stale inserts) FULL OUTER JOIN batch on the key.
-        #    Prefix-rename both sides so same-named payload columns never
-        #    collide; pick the winner with scalar exprs (codegen end-to-end).
-        lineage = bool(snap.get("row_lineage"))
-        if lineage:
-            bad = [c for c in (_ROW_ID, _LUV) if c in batch.columns]
-            if bad:
-                raise ValueError(
-                    f"batch carries reserved row-lineage column(s) {bad}: "
-                    f"ids are table-assigned, never fed in")
         cur = self.read(touched, snapshot=snap, with_tombstones=True,
-                        with_positions=dv, with_row_ids=lineage)
+                        with_positions=dv,
+                        with_row_ids=bool(snap.get("row_lineage")))
         if dv and dv_prune:
             # a dv merge only ever ACTS on existing rows whose key appears
             # in the batch (winners mask/supersede them; every other row
@@ -2397,31 +2434,35 @@ class LakeTable(TableIO):
             # 'broadcast' pins the key set map-side (callers guard size —
             # CdcEngine uses broadcast_key_limit); 'auto' leaves the hint
             # to AQE for giant batches.
-            keys = resolved.select(*key_cols)
+            keys = resolved.select(*snap["key_cols"])
             if dv_prune == "broadcast":
                 keys = F.broadcast(keys)
-            cur = cur.join(keys, key_cols, "left_semi")
-        have = set(resolved.columns)
+            cur = cur.join(keys, snap["key_cols"], "left_semi")
+        return touched, cur
 
-        def _in_col(f):
-            if f.name not in have:
-                return F.lit(None).cast(f.dataType)
-            c = F.col(f.name).cast(f.dataType)
-            if f.name in key_cols:
-                # WAL contract: key columns are NOT NULL — fail the batch
-                # loudly instead of merging a silent null-key row
-                c = F.when(c.isNotNull(), c).otherwise(F.raise_error(F.lit(
-                    f"null key column '{f.name}' in merge batch "
-                    f"(key columns are NOT NULL)")))
-            return c
-
+    def _merge_join(self, snap: dict, schema: StructType,
+                    resolved: DataFrame, cur: DataFrame, *, op_col: str,
+                    delete_value: str, patch_cols: list[str] | None,
+                    additive_cols: list[str] | None, delete_condition,
+                    dv: bool) -> DataFrame:
+        """Merge stage 4: current state FULL OUTER JOIN batch on the key,
+        both sides prefix-renamed (``_e_``/``_n_``) so same-named payload
+        columns never collide, the winner picked with scalar expressions
+        (codegen end-to-end). Alongside the winning row the output
+        carries ``_tombstone``, ``_is_new``, ``_is_del`` and, per table
+        feature, the row-lineage ids, the superseded row's dv address
+        and the change-feed pre-image and type."""
+        key_cols, seq_col = snap["key_cols"], snap["seq_col"]
+        lineage = bool(snap.get("row_lineage"))
+        has = set(resolved.columns)
         incoming = resolved.select(
-            *[_in_col(f).alias(f"_n_{f.name}") for f in table_schema.fields],
+            *[_batch_col(f, has, key_cols).alias(f"_n_{f.name}")
+              for f in schema.fields],
             F.col(op_col).alias(f"_n_{op_col}"),
             (F.col("_had_del") if patch_cols else F.lit(False))
             .alias("_n__had_del"))
         existing = cur.select(
-            *[F.col(f.name).alias(f"_e_{f.name}") for f in table_schema.fields],
+            *[F.col(f.name).alias(f"_e_{f.name}") for f in schema.fields],
             F.coalesce(F.col(_TOMB), F.lit(False)).alias(f"_e_{_TOMB}"),
             *([F.col(_DV_FILE).alias(f"_e_{_DV_FILE}"),
                F.col(_DV_POS).alias(f"_e_{_DV_POS}")] if dv else []),
@@ -2450,6 +2491,7 @@ class LakeTable(TableIO):
         # alone clusters the write. Mid-rebucket the router breaks the
         # partition↔bucket identity (transitional ids aren't pmod(h, n)),
         # so that write keeps its repartition.
+        n_buckets = snap["n_buckets"]
         p_shuffle = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         width = next((w for w in range(p_shuffle, n_buckets)
                       if n_buckets % w == 0), n_buckets)
@@ -2464,47 +2506,46 @@ class LakeTable(TableIO):
         # go to the batch (idempotent re-apply of the same event converges).
         # Null seqs (rows predating a seq column, or evolved-in keys) lose
         # to any real seq; new-null beats existing-null.
+        has_commit = "commit" in schema.fieldNames()
         has_n = F.col(f"_n_{key_cols[0]}").isNotNull()
         has_e = F.col(f"_e_{key_cols[0]}").isNotNull()
         n_seq = F.coalesce(F.col(f"_n_{seq_col}"), F.lit(-1).cast("long"))
         e_seq = F.coalesce(F.col(f"_e_{seq_col}"), F.lit(-2).cast("long"))
         newer = n_seq > e_seq
-        if "commit" in {f.name for f in table_schema.fields}:
+        # the row's (seq, commit) moved: an idempotent re-apply of the same
+        # event is NOT a change (change feed and row lineage agree on it)
+        moved = ~F.col(f"_n_{seq_col}").eqNullSafe(F.col(f"_e_{seq_col}"))
+        if has_commit:
             newer = newer | ((n_seq == e_seq) &
                              (F.coalesce(F.col("_n_commit"), F.lit("")) >=
                               F.coalesce(F.col("_e_commit"), F.lit(""))))
+            moved = moved | ~F.col("_n_commit").eqNullSafe(
+                F.col("_e_commit"))
         use_new = has_n & (~has_e | newer)
+        e_tomb = F.col(f"_e_{_TOMB}")
 
         def _val(f):
+            n_val, e_val = F.col(f"_n_{f.name}"), F.col(f"_e_{f.name}")
             if f.name in key_cols:
-                return F.coalesce(F.col(f"_n_{f.name}"),
-                                  F.col(f"_e_{f.name}"))
+                return F.coalesce(n_val, e_val)
             if additive_cols and f.name in additive_cols:
                 # running-total merge: winner = old + batch contribution,
                 # with a tombstoned old row (a previously-deleted key being
                 # revived) contributing zero, not its stale stored value
                 zero = F.lit(0).cast(f.dataType)
-                e_val = F.when(~F.col(f"_e_{_TOMB}"),
-                               F.col(f"_e_{f.name}")).otherwise(zero)
-                summed = (F.coalesce(e_val, zero)
-                          + F.coalesce(F.col(f"_n_{f.name}"), zero))
-                return F.when(use_new, summed) \
-                        .otherwise(F.col(f"_e_{f.name}"))
+                live_e = F.when(~e_tomb, e_val).otherwise(zero)
+                summed = F.coalesce(live_e, zero) + F.coalesce(n_val, zero)
+                return F.when(use_new, summed).otherwise(e_val)
             if patch_cols and f.name in patch_cols:
                 # sparse update: null batch value inherits the stored
                 # value — unless an in-batch delete or a stored tombstone
                 # sits between them (a revived key starts fresh)
-                inherit = F.when(
-                    ~F.col(f"_e_{_TOMB}") & ~F.col("_n__had_del"),
-                    F.col(f"_e_{f.name}"))
-                return F.when(use_new,
-                              F.coalesce(F.col(f"_n_{f.name}"), inherit)) \
-                        .otherwise(F.col(f"_e_{f.name}"))
-            return F.when(use_new, F.col(f"_n_{f.name}")) \
-                    .otherwise(F.col(f"_e_{f.name}"))
+                inherit = F.when(~e_tomb & ~F.col("_n__had_del"), e_val)
+                return F.when(use_new, F.coalesce(n_val, inherit)) \
+                        .otherwise(e_val)
+            return F.when(use_new, n_val).otherwise(e_val)
 
-        vals = {f.name: _val(f) for f in table_schema.fields}
-        picked = [vals[name].alias(name) for name in vals]
+        vals = {f.name: _val(f) for f in schema.fields}
         del_now = F.col(f"_n_{op_col}") == F.lit(delete_value)
         if delete_condition is not None:
             # value-derived deletion (e.g. a counter folding to zero),
@@ -2512,201 +2553,70 @@ class LakeTable(TableIO):
             # can know deletion post-merge
             del_now = del_now | F.coalesce(delete_condition(vals),
                                            F.lit(False))
-        is_delete = F.when(use_new, del_now).otherwise(F.col(f"_e_{_TOMB}"))
-        # change-data-feed emission (opt-in at create): the merge join is
-        # the ONE place that sees both the pre-image and the winner, so the
-        # per-commit change rows come out as a by-product — classified
-        # here, materialized after the state write from the cached join
-        # output. An idempotent re-apply (same seq+commit) emits nothing.
-        cdf_on = bool(snap.get("changefeed"))
-        cdf_cols = []
-        if cdf_on:
-            alive_e = has_e & ~F.col(f"_e_{_TOMB}")
-            new_is_del = del_now
-            cdf_moved = ~F.col(f"_n_{seq_col}").eqNullSafe(
-                F.col(f"_e_{seq_col}"))
-            if "commit" in {f.name for f in table_schema.fields}:
-                cdf_moved = cdf_moved | ~F.col("_n_commit").eqNullSafe(
-                    F.col("_e_commit"))
-            cdf_type = (
-                F.when(use_new & ~new_is_del & ~alive_e, F.lit("insert"))
-                .when(use_new & ~new_is_del & alive_e & cdf_moved,
-                      F.lit("update_postimage"))
-                .when(use_new & new_is_del & alive_e, F.lit("delete")))
-            cdf_cols = [
-                F.struct(*[F.col(f"_e_{f.name}").alias(f.name)
-                           for f in table_schema.fields]).alias("_pre"),
-                cdf_type.alias("_cdf")]
-        lineage_cols = []
-        if lineage:
-            # stable row identity (Iceberg v3): a matched key — alive OR
-            # tombstoned (a revived key is the same row) — keeps its
-            # stored id; brand-new keys leave it null and take their id
-            # lazily from the new file's first_row_id + position.
-            # _last_updated_version moves only when the row actually
-            # changes (an idempotent re-apply of the same (seq, commit)
-            # is NOT a change — same rule the change feed uses).
-            lin_moved = ~F.col(f"_n_{seq_col}").eqNullSafe(
-                F.col(f"_e_{seq_col}"))
-            if "commit" in {f.name for f in table_schema.fields}:
-                lin_moved = lin_moved | ~F.col("_n_commit").eqNullSafe(
-                    F.col("_e_commit"))
-            lineage_cols = [
-                F.col("_e__rid").alias(_ROW_ID),
-                F.when(has_e & ~(use_new & lin_moved),
-                       F.coalesce(F.col("_e__luv"),
-                                  F.lit(snap["version"] + 1)))
-                 .otherwise(F.lit(snap["version"] + 1))
-                 .cast("long").alias(_LUV)]
-        dead_cols = []
-        if dv:
-            # the superseded existing row's physical address — only a
-            # matched row the batch out-ranks dies; loser batch rows and
-            # untouched existing rows mask nothing
-            dead_cols = [
-                F.when(use_new & has_e,
-                       F.col(f"_e_{_DV_FILE}")).alias("_dead_f"),
-                F.when(use_new & has_e,
-                       F.col(f"_e_{_DV_POS}")).alias("_dead_p"),
-                F.when(use_new & has_e,
-                       F.col(f"_e_{_TOMB}")).alias("_dead_t")]
-        merged = j.select(*picked, is_delete.alias(_TOMB),
+        extra = _feature_cols(snap, schema, use_new=use_new, has_e=has_e,
+                              del_now=del_now, moved=moved, dv=dv)
+        merged = j.select(*[v.alias(k) for k, v in vals.items()],
+                          F.when(use_new, del_now).otherwise(e_tomb)
+                          .alias(_TOMB),
                           use_new.alias("_is_new"),
-                          (use_new & del_now).alias("_is_del"),
-                          *lineage_cols, *dead_cols, *cdf_cols)
+                          (use_new & del_now).alias("_is_del"), *extra)
         if dv:
             # dv writes ONLY the changed rows; several actions consume
             # this small (O(batch)) frame — data-file write, dv write,
             # per-file dead counts, change feed — so persist it
-            merged = merged.where(F.col("_is_new")) \
-                           .persist(StorageLevel.MEMORY_AND_DISK)
-        elif cdf_on:
+            return merged.where(F.col("_is_new")) \
+                         .persist(StorageLevel.MEMORY_AND_DISK)
+        if snap.get("changefeed"):
             # two actions consume the join (state write, change write);
             # cache it so the second reads O(touched buckets) from local
             # storage instead of re-running the merge
-            merged = merged.persist(StorageLevel.MEMORY_AND_DISK)
+            return merged.persist(StorageLevel.MEMORY_AND_DISK)
+        return merged
 
-        # 6. metrics ride the write action itself via Observation — zero
-        #    extra pass (a separate .agg() would re-execute the whole merge
-        #    plan, including any upstream streaming state-store scan).
-        metrics = {"batch_id": bid, "buckets_touched": len(touched),
-                   **base_metrics}
-        obs = None
-        observed = merged
-        if collect_metrics:
-            obs = Observation()
-            observed = merged.observe(
-                obs,
-                F.sum(F.when(F.col("_is_new") & ~F.col("_is_del"), 1)
-                      .otherwise(0)).alias("rows_upserted"),
-                F.sum(F.when(F.col("_is_del"), 1).otherwise(0)
-                      ).alias("rows_deleted"),
-                F.count(F.lit(1)).alias("keys_considered"),
-            )
-
+    def _merge_write(self, snap: dict, schema: StructType, merged: DataFrame,
+                     touched: list[int], metrics: dict, *, token: str,
+                     dv: bool, staged_changes: bool
+                     ) -> tuple[dict[int, list[dict]], dict | None]:
+        """Merge stage 5: write the touched buckets' files through the
+        shared write stage (one file per bucket, see the join width),
+        the dv mask and the change files, and point the touched buckets'
+        manifest entries at them. The row counts ride the data write as
+        an ``Observation`` — a separate ``.agg()`` would re-execute the
+        whole merge plan, including any upstream streaming state-store
+        scan. Returns (staged files, change-log entry or None)."""
+        obs = Observation()
+        observed = merged.observe(
+            obs,
+            F.sum(F.when(F.col("_is_new") & ~F.col("_is_del"), 1)
+                  .otherwise(0)).alias("rows_upserted"),
+            F.sum(F.when(F.col("_is_del"), 1).otherwise(0)
+                  ).alias("rows_deleted"),
+            F.count(F.lit(1)).alias("keys_considered"))
         # deletes persist as tombstone rows (compaction may drop them once
         # no lower-seq event can still arrive)
         out = observed.select(
-            *[f.name for f in table_schema.fields], _TOMB,
-            *([_ROW_ID, _LUV] if lineage else []),
+            *schema.fieldNames(), _TOMB,
+            *([_ROW_ID, _LUV] if snap.get("row_lineage") else []),
             routed_bucket_expr(snap).alias(_BUCKET))
-
-        # 6. write new files for touched buckets (one file per bucket, see
-        #    the join width above), then commit atomically
+        staged = self._write_bucket_files(
+            snap, out, token, already_clustered=not _mid_rebucket(snap))
+        got = obs.get
+        metrics.update({k: int(got[k] or 0) for k in
+                        ("rows_upserted", "rows_deleted", "keys_considered")})
         version = snap["version"] + 1
-        token = uuid.uuid4().hex[:12]
-        staged = self._write_bucket_files(out, version, schema_v, n_buckets,
-                                          key_cols=snap["key_cols"],
-                                          token=token,
-                                          already_clustered=not migrating,
-                                          stats_cols=snap.get("stats_cols"),
-                                          bloom_bpk=snap.get("bloom_bits_per_key", 0),
-                                          sketch_cols=snap.get("sketch_cols"))
-        self._assign_row_ranges(snap, staged)
-        if obs is not None:
-            got = obs.get
-            metrics.update({
-                "rows_upserted": int(got["rows_upserted"] or 0),
-                "rows_deleted": int(got["rows_deleted"] or 0),
-                "keys_considered": int(got["keys_considered"] or 0),
-            })
-        dv_parts: list[str] = []
-        dead_by_file: dict[str, tuple[int, int]] = {}
-        if dv:
-            # the mask delta: every superseded row's (file, pos), written
-            # as ONE per-commit parquet set; each touched file's entry
-            # will reference these parts IN ADDITION to its earlier ones
-            # (per-file sets are monotone until compaction rewrites the
-            # file), so no old dv part is ever read or rewritten here.
-            dead = (merged.where(F.col("_dead_f").isNotNull())
-                    .select(F.col("_dead_f").alias("file"),
-                            F.col("_dead_p").alias("pos"),
-                            F.coalesce(F.col("_dead_t"),
-                                       F.lit(False)).alias("tomb")))
-            per_file = (dead.groupBy("file")
-                        .agg(F.count(F.lit(1)).alias("dead"),
-                             F.sum(F.when(~F.col("tomb"), 1).otherwise(0))
-                             .alias("dead_live")).collect())
-            if per_file:
-                dv_rel = f"c{version}-{token}/dv"
-                # few large parts, not one per shuffle partition: every
-                # read of a masked file opens every referenced part, so
-                # part count is read-path fan-out. ~4M positions/part
-                # (~50 MB) — sized from the ALREADY-collected dead total,
-                # no extra action.
-                nparts = max(1, -(-sum(int(r["dead"]) for r in per_file)
-                                  // 4_000_000))
-                dead.select("file", "pos").coalesce(nparts).write.parquet(
-                    os.path.join(self.data_dir, dv_rel))
-                dv_parts = sorted(
-                    os.path.join(dv_rel, os.path.basename(p))
-                    for p in glob.glob(os.path.join(
-                        self.data_dir, dv_rel, "part-*.parquet")))
-                dead_by_file = {r["file"]: (int(r["dead"]),
-                                            int(r["dead_live"]))
-                                for r in per_file}
-            metrics["rows_dv_masked"] = sum(
-                d for d, _ in dead_by_file.values())
-        if cdf_on:
-            try:
-                fields = table_schema.fields
-                post = F.struct(
-                    *[F.col(f.name) for f in fields],
-                    F.col("_cdf").alias("change_type"))
-
-                def _pre(tag: str):
-                    return F.struct(
-                        *[F.col(f"_pre.{f.name}").alias(f.name)
-                          for f in fields],
-                        F.lit(tag).alias("change_type"))
-
-                ch_rows = (
-                    F.when(F.col("_cdf") == "insert", F.array(post))
-                    .when(F.col("_cdf") == "update_postimage",
-                          F.array(_pre("update_preimage"), post))
-                    .when(F.col("_cdf") == "delete",
-                          F.array(_pre("delete"))))
-                # _change_version stamps replay order: a delete row
-                # reuses its pre-image's (seq, commit), so data columns
-                # alone cannot order a key's transitions — the commit
-                # version can (Delta CDF's _commit_version). Readers with
-                # a pinned schema (read_change_log) simply project it out.
-                ch = (merged.where(F.col("_cdf").isNotNull())
-                      .select(F.explode(ch_rows).alias("_r"))
-                      .select("_r.*",
-                              F.lit(version).cast("long")
-                              .alias("_change_version")))
-                snap["changes"] = self._write_change_files(
-                    ch, version, schema_v, token,
-                    staged=wap_id is not None or branch is not None)
-                metrics["changes_rows"] = snap["changes"]["rows"]
-            finally:
-                merged.unpersist()
-        else:
-            # a feed-less commit must not inherit the PREVIOUS version's
-            # change-file entry through the mutated snapshot dict
-            snap.pop("changes", None)
+        changes = None
+        try:
             if dv:
+                dead_by_file = self._write_dv_mask(merged, version, token)
+                metrics["rows_dv_masked"] = sum(
+                    d for _, d, _ in dead_by_file.values())
+            if snap.get("changefeed"):
+                changes = self._write_change_files(
+                    _change_rows(merged, schema, version), version,
+                    _schema_v(snap), token, staged=staged_changes)
+                metrics["changes_rows"] = changes["rows"]
+        finally:
+            if dv or snap.get("changefeed"):
                 merged.unpersist()
         if dv:
             # keep the touched buckets' existing entries (patched with
@@ -2717,74 +2627,114 @@ class LakeTable(TableIO):
             # become GC-able once retention passes)
             for b in touched:
                 bstr = str(b)
-                old = snap["buckets"][bstr] if bstr in snap["buckets"] \
-                    else []
-                new_list = []
-                for e in old:
+                kept = []
+                for e in (snap["buckets"][bstr]
+                          if bstr in snap["buckets"] else []):
                     if e["file"] in dead_by_file:
-                        d, dl = dead_by_file[e["file"]]
+                        parts, d, dl = dead_by_file[e["file"]]
                         e = dict(e)
                         ref = dict(e.get("dv") or {})
-                        ref["files"] = list(ref.get("files") or []) \
-                            + dv_parts
+                        ref["files"] = list(ref.get("files") or []) + parts
                         ref["dead"] = int(ref.get("dead", 0)) + d
                         e["dv"] = ref
                         if "live" in e:
                             e["live"] = int(e["live"]) - dl
                         if "rows" in e and ref["dead"] >= int(e["rows"]):
                             continue  # fully dead file: unreference it
-                    new_list.append(e)
-                new_list.extend(staged.get(int(b), []))
-                snap["buckets"][bstr] = new_list
+                    kept.append(e)
+                snap["buckets"][bstr] = kept + staged.get(int(b), [])
         else:
             for b in touched:
                 snap["buckets"][str(b)] = staged.get(int(b), [])
             # the cow rewrite collapsed each touched bucket to one
             # generation — it must drop out of mor_buckets or reads would
-            # keep paying (and a duplicate-free invariant-holding bucket
-            # would be harmless but a later overwrite/append interleave
-            # could silently LWW-collapse)
-            touched_set = {str(b) for b in touched}
+            # keep paying (and a later overwrite/append interleave could
+            # silently LWW-collapse)
+            ts = {str(b) for b in touched}
             snap["mor_buckets"] = sorted(
                 (b for b in {str(x) for x in snap.get("mor_buckets", [])}
-                 if b not in touched_set), key=int)
-        snap["version"] = version
-        if set_properties:
-            props = dict(snap.get("properties", {}))
-            props.update(set_properties)
-            snap["properties"] = props
-        metrics["wall_s"] = round(time.time() - t0, 3)
-        _ledger_add(led, bid, metrics, ledger_scope)
-        self._record_lineage(snap, self._write_lineage(version, bid, staged,
-                                                       token=token))
-        if wap_id is not None:
-            self._stage_wap(wap_id, snap, parent=version - 1)
-            metrics["staged_wap"] = wap_id
-        elif branch is not None:
-            self._branch_append(branch, snap, base_version=version - 1)
-            metrics["branch"] = branch
+                 if b not in ts), key=int)
+        return staged, changes
+
+    def _write_dv_mask(self, merged: DataFrame, version: int,
+                       token: str) -> dict[str, tuple[list[str], int, int]]:
+        """The dv merge's mask delta: every superseded row's (file, pos),
+        written as ONE per-commit parquet set; each touched file's entry
+        references these parts IN ADDITION to its earlier ones (per-file
+        sets are monotone until compaction rewrites the file), so no old
+        dv part is ever read or rewritten here. Returns, per masked file,
+        (new parts, rows masked, live rows masked)."""
+        dead = (merged.where(F.col("_dead_f").isNotNull())
+                .select(F.col("_dead_f").alias("file"),
+                        F.col("_dead_p").alias("pos"),
+                        F.coalesce(F.col("_dead_t"),
+                                   F.lit(False)).alias("tomb")))
+        per_file = (dead.groupBy("file")
+                    .agg(F.count(F.lit(1)).alias("dead"),
+                         F.sum(F.when(~F.col("tomb"), 1).otherwise(0))
+                         .alias("dead_live")).collect())
+        if not per_file:
+            return {}
+        dv_rel = f"c{version}-{token}/dv"
+        # few large parts, not one per shuffle partition: every read of a
+        # masked file opens every referenced part, so part count is
+        # read-path fan-out. ~4M positions/part (~50 MB) — sized from the
+        # ALREADY-collected dead total, no extra action.
+        nparts = max(1, -(-sum(int(r["dead"]) for r in per_file)
+                          // 4_000_000))
+        dead.select("file", "pos").coalesce(nparts).write.parquet(
+            os.path.join(self.data_dir, dv_rel))
+        parts = sorted(os.path.join(dv_rel, os.path.basename(p))
+                       for p in glob.glob(os.path.join(
+                           self.data_dir, dv_rel, "part-*.parquet")))
+        return {r["file"]: (parts, int(r["dead"]), int(r["dead_live"]))
+                for r in per_file}
+
+    # ------------------------------------------------------------- commit
+    def _commit_stage(self, snap: dict, staged: dict[int, list[dict]],
+                      bid: str, metrics: dict, *, token: str,
+                      changes: dict | None = None, scope: str = "default",
+                      set_properties: dict | None = None) -> None:
+        """The commit stage every data writer shares, up to the publish:
+        advance the version, stamp this commit's change-log entry, fold
+        ``set_properties`` in, ledger ``metrics`` under ``bid`` and
+        record the commit's lineage file. Mutates ``snap``;
+        :meth:`_publish` then makes it visible.
+
+        ``changes``: the entry for this commit's change files, or a
+        logical no-op entry (:func:`_noop_changes`). ``None`` means the
+        commit wrote none: the previous version's entry must not be
+        inherited, and on a change-feed table a durable gap marker is
+        stamped (carried forward by every later commit) — raw-file feed
+        tailers (ChangeLogReplicator) cannot serve across a log-less
+        commit and must detect one even long after it happened."""
+        snap["version"] += 1
+        if changes is not None:
+            snap["changes"] = changes
         else:
-            try:
-                self._commit_snapshot(snap, expected_version=version - 1)
-            except ConcurrentCommitError:
-                # everything below the CAS is still valid work: staged
-                # data files, per-bucket manifests, change files. Hand
-                # merge_batch what a metadata-only rebase needs — UNLESS
-                # this commit depends on table state beyond its touched
-                # buckets (schema evolution pins a new global schema;
-                # delete_condition evaluated victims against the stale
-                # snapshot; an active rebucket frontier routes keys), in
-                # which case only a full re-merge is sound.
-                if (_rebase_ctx is not None and not changed
-                        and not migrating and delete_condition is None):
-                    _rebase_ctx.update(
-                        armed=True, snap=snap, base_version=version - 1,
-                        touched=[int(b) for b in touched], staged=staged,
-                        token=token, bid=bid, ledger_scope=ledger_scope,
-                        metrics=metrics, set_properties=set_properties,
-                        dv=dv)
-                raise
-        return metrics
+            snap.pop("changes", None)
+            if snap.get("changefeed"):
+                snap["log_gap_version"] = snap["version"]
+        if set_properties:
+            snap["properties"] = {**snap.get("properties", {}),
+                                  **set_properties}
+        _ledger_add(snap["ledger"], bid, metrics, scope)
+        self._record_lineage(snap, self._write_lineage(
+            snap["version"], bid, staged, token=token))
+
+    def _publish(self, snap: dict, *, wap_id: str | None = None,
+                 branch: str | None = None) -> None:
+        """Make ``snap`` (already at its new version) visible: the CURRENT
+        CAS on main, a staged WAP snapshot, or a branch-chain append.
+        Raises ``ConcurrentCommitError`` when another writer got there
+        first."""
+        base = snap["version"] - 1
+        if wap_id is not None:
+            self._stage_wap(wap_id, snap, parent=base)
+        elif branch is not None:
+            self._branch_append(branch, snap, base_version=base)
+        else:
+            self._commit_snapshot(snap, expected_version=base)
 
     # --------------------------------------------------- write-audit-publish
     @staticmethod
@@ -3325,23 +3275,27 @@ class LakeTable(TableIO):
     # files; deployments there should lower this.
     _STATS_DISTRIBUTED_OVER = 4096
 
-    def _write_bucket_files(self, df: DataFrame, version: int, schema_v: int,
-                            n_buckets: int, key_cols: list[str] | None = None,
-                            token: str | None = None,
+    def _write_bucket_files(self, snap: dict, df: DataFrame, token: str, *,
+                            n_buckets: int | None = None,
                             already_clustered: bool = False,
-                            sort_cols: list[str] | None = None,
+                            sort_cols: list | None = None,
                             stats_cols: list[str] | None = None,
-                            bloom_bpk: int = 0,
-                            sketch_cols: list[str] | None = None,
                             max_records_per_file: int | None = None)\
             -> dict[int, list[dict]]:
-        """Write df (carrying _bucket) hive-partitioned DIRECTLY to its
-        final location: a per-commit-attempt directory
-        ``data/c{version}-{token}/`` whose files are recorded in the
-        snapshot by RELATIVE path. There is no rename pass — at 100-TB
-        commit sizes (10^4-10^5 files) a per-file driver-side os.replace
-        loop serializes the commit; here the driver's per-file work is
-        one directory listing, O(1) syscalls per file list entry.
+        """The write stage every data writer shares. Writes df (carrying
+        _bucket) for the commit after ``snap`` — its version, latest
+        schema version, key columns, bucket count (unless ``n_buckets``
+        overrides it), recorded stats columns (unless ``stats_cols``
+        does), bloom density and sketch columns all come from ``snap`` —
+        and assigns the new files' row-id ranges (:meth:`_assign_row_ranges`).
+
+        Files go hive-partitioned DIRECTLY to their final location: a
+        per-commit-attempt directory ``data/c{version}-{token}/`` whose
+        files are recorded in the snapshot by RELATIVE path. There is no
+        rename pass — at 100-TB commit sizes (10^4-10^5 files) a per-file
+        driver-side os.replace loop serializes the commit; here the
+        driver's per-file work is one directory listing, O(1) syscalls
+        per file list entry.
 
         ``token`` (a per-commit-attempt uuid) keys the directory: two
         writers racing toward the same version write DISJOINT trees, so
@@ -3361,7 +3315,11 @@ class LakeTable(TableIO):
         so every task writes exactly one bucket — balanced, one file per
         bucket. Falls back to repartitioning by the bucket column when the
         frame lacks the keys."""
-        token = token or uuid.uuid4().hex[:12]
+        version, schema_v = snap["version"] + 1, _schema_v(snap)
+        key_cols = snap["key_cols"]
+        n_buckets = n_buckets or snap["n_buckets"]
+        if stats_cols is None:
+            stats_cols = snap.get("stats_cols")
         commit_dir = f"c{version}-{token}"
         out_dir = os.path.join(self.data_dir, commit_dir)
         if already_clustered:
@@ -3370,7 +3328,7 @@ class LakeTable(TableIO):
             # splits by _BUCKET value anyway, so correctness never depends
             # on this, only file counts do
             clustered = df
-        elif key_cols and all(c in df.columns for c in key_cols):
+        elif all(c in df.columns for c in key_cols):
             clustered = df.repartition(n_buckets, *[F.col(c) for c in key_cols])
         else:
             clustered = df.repartition(n_buckets, F.col(_BUCKET))
@@ -3434,10 +3392,12 @@ class LakeTable(TableIO):
                 e["stats"] = col_stats
             if live is not None:
                 e["live"] = live
-        if bloom_bpk > 0 and key_cols and entries:
+        bloom_bpk = snap.get("bloom_bits_per_key", 0)
+        if bloom_bpk > 0 and entries:
             self._write_bloom_sidecars(entries, key_cols, bloom_bpk)
-        if sketch_cols and entries:
-            self._write_sketch_sidecar(out_dir, sketch_cols)
+        if snap.get("sketch_cols") and entries:
+            self._write_sketch_sidecar(out_dir, snap["sketch_cols"])
+        self._assign_row_ranges(snap, staged)
         return staged
 
     @staticmethod
@@ -3861,7 +3821,6 @@ class LakeTable(TableIO):
     # ---------------------------------------------------------------- append
     def append_batch(self, batch: DataFrame, batch_id: int | str, *,
                      op_col: str = "op", delete_value: str = "delete",
-                     collect_metrics: bool = True,
                      batch_compacted: bool = False,
                      ledger_scope: str = "default",
                      extra_metrics: dict | None = None) -> dict:
@@ -3877,7 +3836,9 @@ class LakeTable(TableIO):
         high-frequency micro-batches over a huge table, append + periodic
         compaction is the only shape whose ingest cost does not grow with
         the table. Exactly-once per (ledger_scope, batch_id), same as
-        merge_batch; schema evolution identical."""
+        merge_batch; the validate + evolve, write and commit stages are
+        the merge's own, so schema evolution, the retired-name refusal
+        and the NOT NULL key guard are identical."""
         snap = self.snapshot()
         led = snap["ledger"]
         bid = str(batch_id)
@@ -3891,66 +3852,29 @@ class LakeTable(TableIO):
                 "row_lineage table: a read-time LWW winner from a newer "
                 "generation cannot inherit its predecessor's _row_id "
                 "without the merge join; use merge_batch (cow or dv)")
-        key_cols, seq_col = snap["key_cols"], snap["seq_col"]
-        n_buckets = snap["n_buckets"]
-        missing_keys = [k for k in key_cols if k not in batch.columns]
-        if missing_keys:
-            raise ValueError(
-                f"batch is missing key column(s) {missing_keys}; key "
-                f"columns are required on every batch")
-
-        # schema evolution: identical contract to merge_batch
-        batch_data_schema = StructType(
-            [f for f in batch.schema.fields if f.name != op_col])
-        table_schema = StructType.fromJson(snap["schema"])
-        _check_retired_names(batch.columns, snap)
-        new_schema, changed = evolve_schema(table_schema, batch_data_schema)
-        schema_v = max(int(v) for v in snap["schemas"]) if snap["schemas"] else 0
-        if changed:
-            schema_v += 1
-            snap["schemas"][str(schema_v)] = json.loads(new_schema.json())
-            snap["schema"] = json.loads(new_schema.json())
-            table_schema = new_schema
-
-        resolved = batch
-        if not batch_compacted:
-            ord_first = [seq_col] + \
-                (["commit"] if "commit" in resolved.columns else [])
-            ordered = ord_first + \
-                [c for c in resolved.columns if c not in ord_first]
-            resolved = (resolved.groupBy(*key_cols)
-                        .agg(F.max(F.struct(*ordered)).alias("_w"))
-                        .select("_w.*").select(*resolved.columns))
-        tagged = resolved.withColumn(
-            _TOMB, F.col(op_col) == F.lit(delete_value)).drop(op_col)
-        out_schema = StructType(list(table_schema.fields) +
-                                [StructField(_TOMB, BooleanType(), True)])
-        out = align_to_schema(tagged, out_schema) \
+        key_cols = snap["key_cols"]
+        schema, _ = self._evolve_stage(snap, batch, op_col)
+        resolved = batch if batch_compacted \
+            else lww_argmax(batch, key_cols, snap["seq_col"])
+        has = set(resolved.columns)
+        obs = Observation()
+        out = (resolved.select(
+            *[_batch_col(f, has, key_cols).alias(f.name)
+              for f in schema.fields],
+            (F.col(op_col) == F.lit(delete_value)).alias(_TOMB))
             .withColumn(_BUCKET, routed_bucket_expr(snap))
-
-        metrics: dict = {"batch_id": bid, "mode": "append",
-                         **(extra_metrics or {})}
-        obs = None
-        if collect_metrics:
-            obs = Observation()
-            out = out.observe(
-                obs,
-                F.sum(F.when(~F.col(_TOMB), 1).otherwise(0)
-                      ).alias("rows_appended"),
-                F.sum(F.when(F.col(_TOMB), 1).otherwise(0)
-                      ).alias("deletes_appended"))
-        version = snap["version"] + 1
+            .observe(obs,
+                     F.sum(F.when(~F.col(_TOMB), 1).otherwise(0)
+                           ).alias("rows_appended"),
+                     F.sum(F.when(F.col(_TOMB), 1).otherwise(0)
+                           ).alias("deletes_appended")))
         token = uuid.uuid4().hex[:12]
-        staged = self._write_bucket_files(out, version, schema_v, n_buckets,
-                                          key_cols=key_cols, token=token,
-                                          stats_cols=snap.get("stats_cols"),
-                                          bloom_bpk=snap.get("bloom_bits_per_key", 0),
-                                          sketch_cols=snap.get("sketch_cols"))
-        if obs is not None:
-            got = obs.get
-            metrics.update({
-                "rows_appended": int(got["rows_appended"] or 0),
-                "deletes_appended": int(got["deletes_appended"] or 0)})
+        staged = self._write_bucket_files(snap, out, token)
+        got = obs.get
+        metrics: dict = {"batch_id": bid, "mode": "append",
+                         **(extra_metrics or {}),
+                         "rows_appended": int(got["rows_appended"] or 0),
+                         "deletes_appended": int(got["deletes_appended"] or 0)}
         mor = {str(b) for b in snap.get("mor_buckets", [])}
         for b, files in staged.items():
             # explicit reassignment (not setdefault+extend): the lazy
@@ -3960,23 +3884,14 @@ class LakeTable(TableIO):
                 snap["buckets"].get(str(b), []) + files
             mor.add(str(b))
         snap["mor_buckets"] = sorted(mor, key=int)
+        metrics["buckets_touched"] = len(staged)
+        metrics["wall_s"] = round(time.time() - t0, 3)
         # append mode has no pre-images in hand (that's its whole point:
         # no current-state read) — no change file; read_change_log
-        # snapshot-diffs this step. On a changefeed table, stamp the gap
-        # durably (carried forward by every later commit, surviving
-        # compaction clearing mor_buckets): raw-file feed tailers
-        # (ChangeLogReplicator) cannot serve across a log-less commit and
-        # must be able to detect one even long after it happened.
-        snap.pop("changes", None)
-        if snap.get("changefeed"):
-            snap["log_gap_version"] = version
-        metrics["buckets_touched"] = len(staged)
-        snap["version"] = version
-        metrics["wall_s"] = round(time.time() - t0, 3)
-        _ledger_add(led, bid, metrics, ledger_scope)
-        self._record_lineage(snap, self._write_lineage(version, bid, staged,
-                                                       token=token))
-        self._commit_snapshot(snap, expected_version=version - 1)
+        # snapshot-diffs this step
+        self._commit_stage(snap, staged, bid, metrics, token=token,
+                           scope=ledger_scope)
+        self._publish(snap)
         return metrics
 
     def commit_empty_batch(self, batch_id: int | str,
@@ -3989,7 +3904,8 @@ class LakeTable(TableIO):
         watermark could never advance past the missing id and ``pending``
         would grow by one entry per drain, forever — snapshot JSON size and
         ledger lookups degrading linearly with batch count. One cheap
-        snapshot commit (no data files touched) keeps the ledger O(1).
+        snapshot commit (no data files touched, so no lineage file either)
+        keeps the ledger O(1).
 
         Data-free, so a concurrent-writer conflict is trivially retryable
         in place: re-read the (now advanced) snapshot and re-commit.
@@ -3997,31 +3913,16 @@ class LakeTable(TableIO):
         branch-ingesting stream's empty drains must land WITH its data
         batches or the publish would carry a gapped ledger)."""
         bid = str(batch_id)
-        last_err: Exception | None = None
-        for _ in range(4):
-            snap = self._branch_head(branch) if branch is not None \
-                else self.snapshot()
+
+        def _mut(snap: dict) -> tuple[dict, bool]:
             if _ledger_contains(snap["ledger"], bid, scope):
-                return {"batch_id": bid, "skipped": True}
-            snap["version"] += 1
-            # logical no-op: read_change_log skips this step without a scan
-            snap["changes"] = {"version": snap["version"], "files": [],
-                               "schema_v": max(int(x) for x in snap["schemas"]),
-                               "rows": 0}
+                return {"batch_id": bid, "skipped": True}, False
             metrics = {"batch_id": bid, "empty": True,
                        **(extra_metrics or {})}
             _ledger_add(snap["ledger"], bid, metrics, scope)
-            try:
-                if branch is not None:
-                    self._branch_append(branch, snap,
-                                        base_version=snap["version"] - 1)
-                else:
-                    self._commit_snapshot(
-                        snap, expected_version=snap["version"] - 1)
-                return metrics
-            except ConcurrentCommitError as e:
-                last_err = e
-        raise last_err
+            return metrics, True
+
+        return self._metadata_commit(_mut, branch=branch)
 
     # ------------------------------------------------------------- overwrite
     def overwrite(self, df: DataFrame, batch_id: int | str = "overwrite",
@@ -4036,59 +3937,38 @@ class LakeTable(TableIO):
         duplicate keys is DETERMINISTICALLY compacted to the (seq, commit)
         LWW winner — the same rule every merge uses — instead of being
         stored multi-generation and arbitrarily collapsed at read time.
-        All buckets become single-generation (mor_buckets cleared)."""
+        All buckets become single-generation (mor_buckets cleared). The
+        validate + evolve stage and the NOT NULL key guard are the
+        merge's, so a renamed-away column name is refused instead of
+        evolving back in."""
         snap = self.snapshot()
-        n_buckets = snap["n_buckets"]
         key_cols, seq_col = snap["key_cols"], snap["seq_col"]
-        table_schema = StructType.fromJson(snap["schema"])
-        new_schema, changed = evolve_schema(
-            table_schema, StructType([f for f in df.schema.fields]))
-        schema_v = max(int(v) for v in snap["schemas"])
-        if changed:
-            schema_v += 1
-            snap["schemas"][str(schema_v)] = json.loads(new_schema.json())
-            snap["schema"] = json.loads(new_schema.json())
-        if all(c in df.columns for c in key_cols) and seq_col in df.columns:
-            ord_first = [seq_col] + \
-                (["commit"] if "commit" in df.columns else [])
-            ordered = ord_first + [c for c in df.columns if c not in ord_first]
-            df = (df.groupBy(*key_cols)
-                  .agg(F.max(F.struct(*ordered)).alias("_w"))
-                  .select("_w.*").select(*df.columns))
-        out = align_to_schema(df, new_schema) \
-            .withColumn(_TOMB, F.lit(False)) \
-            .withColumn(_BUCKET, bucket_expr(key_cols, n_buckets))
-        version = snap["version"] + 1
+        schema, _ = self._evolve_stage(snap, df)
+        if seq_col in df.columns:
+            df = lww_argmax(df, key_cols, seq_col)
+        has = set(df.columns)
+        out = df.select(
+            *[_batch_col(f, has, key_cols).alias(f.name)
+              for f in schema.fields],
+            F.lit(False).alias(_TOMB)) \
+            .withColumn(_BUCKET, bucket_expr(key_cols, snap["n_buckets"]))
         if snap.get("row_lineage"):
             # a full replace is all-new rows: ids assign lazily from the
             # new files' ranges; the update stamp is this commit
-            out = out.withColumn(_LUV, F.lit(version).cast("long"))
+            out = out.withColumn(_LUV, F.lit(snap["version"] + 1)
+                                 .cast("long"))
         token = uuid.uuid4().hex[:12]
-        staged = self._write_bucket_files(out, version, schema_v, n_buckets,
-                                          key_cols=key_cols, token=token,
-                                          stats_cols=snap.get("stats_cols"),
-                                          bloom_bpk=snap.get("bloom_bits_per_key", 0),
-                                          sketch_cols=snap.get("sketch_cols"))
-        self._assign_row_ranges(snap, staged)
+        staged = self._write_bucket_files(snap, out, token)
         snap["buckets"] = {str(b): fs for b, fs in staged.items()}
         snap["mor_buckets"] = []
         # full replace under the plain spec cancels any in-progress
         # incremental rebucket (transitional buckets are all replaced)
         snap.pop("rebucket", None)
-        snap.pop("changes", None)  # full replace: step is snapshot-diffed
-        if snap.get("changefeed"):
-            # durable gap marker for raw-file feed tailers (see append_batch)
-            snap["log_gap_version"] = version
-        snap["version"] = version
-        if set_properties:
-            props = dict(snap.get("properties", {}))
-            props.update(set_properties)
-            snap["properties"] = props
         metrics = {"batch_id": str(batch_id), "overwrite": True}
-        _ledger_add(snap["ledger"], str(batch_id), metrics)
-        self._record_lineage(snap, self._write_lineage(
-            version, str(batch_id), staged, token=token))
-        self._commit_snapshot(snap, expected_version=version - 1)
+        # full replace: no change file, the step is snapshot-diffed
+        self._commit_stage(snap, staged, str(batch_id), metrics, token=token,
+                           set_properties=set_properties)
+        self._publish(snap)
         return metrics
 
     # ------------------------------------------------------------ compaction
@@ -4162,7 +4042,6 @@ class LakeTable(TableIO):
         snap = self.snapshot()
         if batch_id and _ledger_contains(snap["ledger"], str(batch_id)):
             return {"compacted_buckets": 0, "skipped": True}
-        n_buckets = snap["n_buckets"]
         mor = {str(b) for b in snap.get("mor_buckets", [])}
         if target_rows_per_file is not None and target_rows_per_file < 1:
             raise ValueError(f"target_rows_per_file must be >= 1, got "
@@ -4236,40 +4115,25 @@ class LakeTable(TableIO):
             df = df.where(~(F.coalesce(F.col(_TOMB), F.lit(False)) &
                             (F.col(snap["seq_col"]) <= tombstone_horizon_seq)))
         sort_cols, stats_cols = _clustered_layout(
-            snap, cluster_by, df.columns, cluster_mode=cluster_mode)
-        if cluster_by and cluster_mode == "zorder":
-            from arlas_proc_spark.lake.zorder import zorder_expr
-            sort_cols = [zorder_expr(df, list(cluster_by))]
+            snap, cluster_by, df, cluster_mode=cluster_mode)
         # routed: a transitional bucket's rows route back to the SAME
         # transitional id (their old bucket is behind the frontier), an
         # unmigrated bucket's rows to itself — a plain-spec expression
         # here would re-route migrated rows back into old buckets
         out = df.withColumn(_BUCKET, routed_bucket_expr(snap))
-        version = snap["version"] + 1
-        schema_v = max(int(v) for v in snap["schemas"])
         token = uuid.uuid4().hex[:12]
-        staged = self._write_bucket_files(out, version, schema_v, n_buckets,
-                                          key_cols=snap["key_cols"],
-                                          token=token,
-                                          sort_cols=sort_cols,
-                                          stats_cols=stats_cols,
-                                          bloom_bpk=snap.get("bloom_bits_per_key", 0),
-                                          sketch_cols=snap.get("sketch_cols"),
-                                          max_records_per_file=target_rows_per_file)
-        self._assign_row_ranges(snap, staged)
+        staged = self._write_bucket_files(
+            snap, out, token, sort_cols=sort_cols, stats_cols=stats_cols,
+            max_records_per_file=target_rows_per_file)
         for b in victims:
             snap["buckets"][str(b)] = staged.get(b, [])
         snap["mor_buckets"] = sorted(mor - {str(b) for b in victims}, key=int)
-        # compaction never changes logical state: a change-log no-op
-        snap["changes"] = {"version": version, "files": [],
-                           "schema_v": schema_v, "rows": 0}
-        snap["version"] = version
         metrics = {"compacted_buckets": len(victims),
-                   "batch_id": batch_id or f"compact-{version}"}
-        _ledger_add(snap["ledger"], metrics["batch_id"], metrics)
-        self._record_lineage(snap, self._write_lineage(
-            version, metrics["batch_id"], staged, token=token))
-        self._commit_snapshot(snap, expected_version=version - 1)
+                   "batch_id": batch_id or f"compact-{snap['version'] + 1}"}
+        # compaction never changes logical state: a change-log no-op
+        self._commit_stage(snap, staged, metrics["batch_id"], metrics,
+                           token=token, changes=_noop_changes(snap))
+        self._publish(snap)
         return metrics
 
     # ------------------------------------------------------------ maintenance
@@ -4600,6 +4464,128 @@ def _resolve_lww(df: DataFrame, key_cols: list[str], seq_col: str) -> DataFrame:
             .where(F.col("_rn") == 1).drop("_rn"))
 
 
+def lww_argmax(df: DataFrame, key_cols: list[str], seq_col: str,
+               folds: dict | None = None) -> DataFrame:
+    """Wide LWW argmax: one row per key, the latest by (seq, commit) —
+    ``max(struct(seq, commit, payload…))``, the same winner rule every
+    merge uses. No join and no broadcast limit, so it is safe at any
+    batch size; every writer that compacts a batch (merge, append,
+    overwrite, ``cdc.engine.lww_compact(strategy='agg')``) uses this one.
+    ``folds`` ({name: aggregate Column}) ride the same aggregation pass
+    and come out as extra columns next to the winner's."""
+    ord_first = [seq_col] + (["commit"] if "commit" in df.columns else [])
+    ordered = ord_first + [c for c in df.columns if c not in ord_first]
+    folds = folds or {}
+    return (df.groupBy(*key_cols)
+            .agg(F.max(F.struct(*ordered)).alias("_w"),
+                 *[agg.alias(name) for name, agg in folds.items()])
+            .select(*[F.col("_w")[c].alias(c) for c in df.columns], *folds))
+
+
+def _batch_col(f: StructField, have: set, key_cols: list[str]):
+    """Batch column ``f.name`` cast to the table type (null when the batch
+    lacks it). Key columns are NOT NULL (the WAL contract): a null key
+    fails the batch loudly instead of committing a silent null-key row."""
+    if f.name not in have:
+        return F.lit(None).cast(f.dataType)
+    c = F.col(f.name).cast(f.dataType)
+    if f.name in key_cols:
+        c = F.when(c.isNotNull(), c).otherwise(F.raise_error(F.lit(
+            f"null key column '{f.name}' in merge batch "
+            f"(key columns are NOT NULL)")))
+    return c
+
+
+def _feature_cols(snap: dict, schema: StructType, *, use_new, has_e,
+                  del_now, moved, dv: bool) -> list:
+    """The join output's per-feature columns, from the winner rule's
+    ``use_new`` (the batch row wins), ``has_e`` (an existing row matched),
+    ``del_now`` (the winner deletes) and ``moved`` (its (seq, commit)
+    differs from the stored row's — an idempotent re-apply of the same
+    event is NOT a change)."""
+    e_tomb = F.col(f"_e_{_TOMB}")
+    cols = []
+    if snap.get("row_lineage"):
+        # stable row identity (Iceberg v3): a matched key — alive OR
+        # tombstoned (a revived key is the same row) — keeps its stored
+        # id; brand-new keys leave it null and take their id lazily from
+        # the new file's first_row_id + position. _last_updated_version
+        # moves only when the row actually changes.
+        version = F.lit(snap["version"] + 1)
+        cols += [F.col("_e__rid").alias(_ROW_ID),
+                 F.when(has_e & ~(use_new & moved),
+                        F.coalesce(F.col("_e__luv"), version))
+                  .otherwise(version).cast("long").alias(_LUV)]
+    if dv:
+        # the superseded existing row's physical address — only a matched
+        # row the batch out-ranks dies; loser batch rows and untouched
+        # existing rows mask nothing
+        dies = use_new & has_e
+        cols += [F.when(dies, F.col(f"_e_{_DV_FILE}")).alias("_dead_f"),
+                 F.when(dies, F.col(f"_e_{_DV_POS}")).alias("_dead_p"),
+                 F.when(dies, e_tomb).alias("_dead_t")]
+    if snap.get("changefeed"):
+        # change-data-feed emission: the merge join is the ONE place that
+        # sees both the pre-image and the winner, so the commit's change
+        # rows come out as a by-product — classified here, materialized
+        # by the write stage (_change_rows)
+        alive_e = has_e & ~e_tomb
+        cols += [
+            F.struct(*[F.col(f"_e_{f.name}").alias(f.name)
+                       for f in schema.fields]).alias("_pre"),
+            F.when(use_new & ~del_now & ~alive_e, F.lit("insert"))
+             .when(use_new & ~del_now & alive_e & moved,
+                   F.lit("update_postimage"))
+             .when(use_new & del_now & alive_e, F.lit("delete"))
+             .alias("_cdf")]
+    return cols
+
+
+def _change_rows(merged: DataFrame, schema: StructType,
+                 version: int) -> DataFrame:
+    """The change-feed rows of one merge, from the join output's ``_pre``
+    and ``_cdf`` columns: an insert emits its post-image, an update its
+    pre- and post-image, a delete its pre-image. ``_change_version``
+    stamps replay order: a delete row reuses its pre-image's (seq,
+    commit), so data columns alone cannot order a key's transitions —
+    the commit version can (Delta CDF's _commit_version). Readers with a
+    pinned schema (read_change_log) simply project it out."""
+    post = F.struct(*[F.col(f.name) for f in schema.fields],
+                    F.col("_cdf").alias("change_type"))
+
+    def _pre(tag: str):
+        return F.struct(*[F.col(f"_pre.{f.name}").alias(f.name)
+                          for f in schema.fields],
+                        F.lit(tag).alias("change_type"))
+
+    rows = (F.when(F.col("_cdf") == "insert", F.array(post))
+            .when(F.col("_cdf") == "update_postimage",
+                  F.array(_pre("update_preimage"), post))
+            .when(F.col("_cdf") == "delete", F.array(_pre("delete"))))
+    return (merged.where(F.col("_cdf").isNotNull())
+            .select(F.explode(rows).alias("_r"))
+            .select("_r.*", F.lit(version).cast("long")
+                    .alias("_change_version")))
+
+
+def _mid_rebucket(snap: dict) -> bool:
+    """An incremental rebucket is in flight: keys route by its frontier."""
+    return bool((snap.get("rebucket") or {}).get("frontier"))
+
+
+def _schema_v(snap: dict) -> int:
+    """The latest schema version — the one new files are written under."""
+    return max((int(v) for v in snap["schemas"]), default=0)
+
+
+def _noop_changes(snap: dict) -> dict:
+    """Change-log entry of a commit after ``snap`` that changes no logical
+    state (compaction, rebucket, an empty batch): read_change_log skips
+    the step without a scan."""
+    return {"version": snap["version"] + 1, "files": [],
+            "schema_v": _schema_v(snap), "rows": 0}
+
+
 def _provably_empty(spark: SparkSession, schema: StructType) -> DataFrame:
     """Empty frame Catalyst can PROVE empty: filter(false) turns the
     RDD-backed createDataFrame([]) into a LocalRelation, so joins against
@@ -4610,29 +4596,31 @@ def _provably_empty(spark: SparkSession, schema: StructType) -> DataFrame:
 
 
 def _clustered_layout(snap: dict, cluster_by: list[str] | None,
-                      available: list[str], *,
-                      cluster_mode: str = "linear",
-                      ) -> tuple[list[str], list[str]]:
-    """(sort_cols, stats_cols) for a maintenance rewrite: default is the
-    key sort with the table's configured stats; ``cluster_by`` replaces
-    the sort order and extends the recorded stats with the cluster
-    columns so ``read(filters=...)`` can prune the rewritten files on
-    them. Fails fast on unknown columns — a typo'd cluster column would
-    otherwise surface as an opaque write-stage AnalysisException.
-    ``cluster_mode='zorder'`` is validated here; the caller swaps the
-    returned sort for the Morton expression (the STATS stay the raw
-    cluster columns either way — pruning reads real-column min/max)."""
+                      df: DataFrame, *, cluster_mode: str = "linear",
+                      ) -> tuple[list, list[str]]:
+    """(sort_cols, stats_cols) for a maintenance rewrite of ``df``:
+    default is the key sort with the table's configured stats;
+    ``cluster_by`` replaces the sort order and extends the recorded stats
+    with the cluster columns so ``read(filters=...)`` can prune the
+    rewritten files on them. Fails fast on unknown columns — a typo'd
+    cluster column would otherwise surface as an opaque write-stage
+    AnalysisException. ``cluster_mode='zorder'`` sorts by the Morton
+    expression instead (lake/zorder.py); the STATS stay the raw cluster
+    columns either way — pruning reads real-column min/max."""
     if cluster_mode not in ("linear", "zorder"):
         raise ValueError(f"cluster_mode must be 'linear' or 'zorder', "
                          f"got {cluster_mode!r}")
     if not cluster_by:
         return list(snap["key_cols"]), snap.get("stats_cols")
-    missing = [c for c in cluster_by if c not in available]
+    missing = [c for c in cluster_by if c not in df.columns]
     if missing:
         raise ValueError(f"cluster_by column(s) {missing} not in table "
-                         f"columns {sorted(available)}")
+                         f"columns {sorted(df.columns)}")
     stats = list(snap.get("stats_cols") or [])
     stats += [c for c in cluster_by if c not in stats]
+    if cluster_mode == "zorder":
+        from arlas_proc_spark.lake.zorder import zorder_expr
+        return [zorder_expr(df, list(cluster_by))], stats
     return list(cluster_by), stats
 
 

@@ -41,7 +41,7 @@ from arlas_proc_spark.sources.readers import read_stream
 class StreamingIngest:
     def __init__(self, spark: SparkSession, table_path: str, *,
                  n_buckets: int = 16, watermark: str = "1 hour",
-                 stream_dedup: bool = True, collect_metrics: bool = True,
+                 stream_dedup: bool = True,
                  event_schema=None, wal_format: str = "parquet",
                  write_mode: str = "cow", compact_every: int | None = None,
                  quarantine_dir: str | None = None,
@@ -140,7 +140,6 @@ class StreamingIngest:
         self.spark = spark
         self.table_path = table_path
         self.n_buckets = n_buckets
-        self.collect_metrics = collect_metrics
         self.write_mode = write_mode
         self.quarantine_dir = quarantine_dir
         self.changefeed = changefeed
@@ -163,7 +162,6 @@ class StreamingIngest:
         self.branch = branch
         self.row_lineage = row_lineage
         self.engine = CdcEngine(spark, table_path, n_buckets=n_buckets,
-                                collect_metrics=collect_metrics,
                                 write_mode=write_mode,
                                 quarantine_dir=quarantine_dir,
                                 changefeed=changefeed,
@@ -262,7 +260,7 @@ class StreamingIngest:
         if self.engine.ledger_scope != scope:
             self.engine = CdcEngine(
                 self.spark, self.table_path, n_buckets=self.n_buckets,
-                collect_metrics=self.collect_metrics, ledger_scope=scope,
+                ledger_scope=scope,
                 write_mode=self.write_mode,
                 quarantine_dir=self.quarantine_dir,
                 changefeed=self.changefeed,

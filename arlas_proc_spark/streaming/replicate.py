@@ -191,7 +191,6 @@ class ChangeLogReplicator:
                     F.col("_change_version") > F.lit(self._seed_version))
             batch = _compact_changes(batch_df, self.key_cols)
             self.target.merge_batch(batch, batch_id, ledger_scope=scope,
-                                    collect_metrics=False,
                                     batch_compacted=True)
 
         writer = (raw.writeStream.foreachBatch(_apply)

@@ -78,8 +78,7 @@ def main() -> None:
         # warmup: a small replay compiles every codegen/JIT/Arrow-worker
         # path, so the timed runs measure sustained throughput, not JVM
         # startup (same protocol as bench_scaling.py)
-        warm = CdcEngine(spark, f"{tmp}/warm", n_buckets=cpus,
-                         collect_metrics=False)
+        warm = CdcEngine(spark, f"{tmp}/warm", n_buckets=cpus)
         warm.replay(changefeed_df(spark, 200_000, parallelism=cpus, **GEN))
 
         feed = changefeed_df(spark, n_events, parallelism=cpus * 2, **GEN)
@@ -95,8 +94,7 @@ def main() -> None:
 
         # --- CDC headline: full replay through the lake (MERGE+snapshot)
         def u_replay(r: int) -> float:
-            engines[r] = CdcEngine(spark, f"{tmp}/table{r}", n_buckets=cpus,
-                                   collect_metrics=False)
+            engines[r] = CdcEngine(spark, f"{tmp}/table{r}", n_buckets=cpus)
             t0 = time.time()
             engines[r].replay(feed)
             return time.time() - t0
@@ -110,7 +108,7 @@ def main() -> None:
         #     ingest cost O(batch) regardless of table size ---
         def u_mor(r: int) -> float:
             mor = CdcEngine(spark, f"{tmp}/mor{r}", n_buckets=cpus,
-                            collect_metrics=False, write_mode="mor")
+                            write_mode="mor")
             mor.replay(feed)  # untimed base
             t0 = time.time()
             mor.apply_batch(mk_inc(r), "inc-1")
@@ -121,7 +119,7 @@ def main() -> None:
         #     O(changed rows) like mor, read stays LWW-free like cow at
         #     the price of one broadcast anti-join against the mask ---
         dvt = CdcEngine(spark, f"{tmp}/dv", n_buckets=cpus,
-                        collect_metrics=False, write_mode="dv")
+                        write_mode="dv")
         dvt.replay(feed)  # untimed base (cow-shaped initial replay)
         dv_read: list[float] = []
 
@@ -144,7 +142,6 @@ def main() -> None:
         #     event crosses the Arrow sha — the cost of sparse feeds) ---
         def u_patch(r: int) -> float:
             pengs[r] = CdcEngine(spark, f"{tmp}/table{r}", n_buckets=cpus,
-                                 collect_metrics=False,
                                  patch_cols=["lang", "content"])
             pinc = changefeed_df(spark, n_events // 10,
                                  parallelism=cpus, **GEN)
@@ -171,7 +168,7 @@ def main() -> None:
         n_cdf = n_events // 4  # setup cost; refresh is flat in table size
         n_ivm_inc = n_events // 100
         cdf = CdcEngine(spark, f"{tmp}/cdf", n_buckets=cpus,
-                        collect_metrics=False, changefeed=True)
+                        changefeed=True)
         cdf.replay(changefeed_df(spark, n_cdf, parallelism=cpus * 2,
                                  **GEN_CDF))
         view = IncrementalAggView(spark, f"{tmp}/view", cdf.table,
@@ -202,7 +199,7 @@ def main() -> None:
         def drain(tag: str, r: int, *, mfpt: int, mode: str = "cow",
                   **kw) -> float:
             ing = StreamingIngest(spark, f"{tmp2}/{tag}{r}",
-                                  n_buckets=cpus, collect_metrics=False,
+                                  n_buckets=cpus,
                                   write_mode=mode, **kw)
             t0 = time.time()
             ing.run_to_completion(f"{tmp2}/wal", f"{tmp2}/ck_{tag}{r}",
@@ -296,7 +293,7 @@ def main() -> None:
             LakeTable.shallow_clone(spark, f"{tmp}/dv",
                                     f"{tmp}/sparse_{mode}")
             eng = CdcEngine(spark, f"{tmp}/sparse_{mode}",
-                            collect_metrics=False, write_mode=mode)
+                            write_mode=mode)
             t0 = time.time()
             eng.apply_batch(sparse, "sparse-1")
             extras[f"cdc_sparse_{mode}_merge_s"] = round(time.time() - t0, 3)

@@ -53,8 +53,7 @@ spark = build_session(app_name=f"scale-{cpus}", master=f"local[{cpus}]",
 root = tempfile.mkdtemp(prefix=f"scale{cpus}_")
 
 def replay(tag, n):
-    eng = CdcEngine(spark, f"{root}/{tag}", n_buckets=n_buckets,
-                    collect_metrics=False)
+    eng = CdcEngine(spark, f"{root}/{tag}", n_buckets=n_buckets)
     feed = changefeed_df(spark, n, parallelism=slices, **GEN)
     t0 = time.time()
     eng.replay(feed)

@@ -96,6 +96,13 @@ def test_posix_cas_primitives(tmp_path):
         cas.swing_pointer(ptr, "c", expected="a")
     assert ei.value.found == "b"
     assert cas.read_pointer(ptr) == "b"
+    # the bootstrap swing is create-only (If-None-Match: *): a second one
+    # loses and leaves the live pointer and no tmp file behind
+    with pytest.raises(CasConflict) as ei:
+        cas.swing_pointer(ptr, "a", expected=None)
+    assert ei.value.found == "b"
+    assert cas.read_pointer(ptr) == "b"
+    assert sorted(os.listdir(tmp_path)) == ["PTR", "obj"]
     cas.remove(p)
     cas.remove(p)  # idempotent
 

@@ -25,8 +25,7 @@ N = 1500
 def _mk(spark, tmp_path, *, register=True):
     wal = str(tmp_path / "wal")
     write_changefeed_batches(spark, wal, N, n_batches=4)
-    ing = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=8,
-                          collect_metrics=False)
+    ing = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=8)
     view = IncrementalAggView(spark, str(tmp_path / "view"),
                               ing.engine.table, ["repo"],
                               {"sum_len": "length(content)"}, n_buckets=8)
@@ -103,7 +102,7 @@ def test_crash_before_flip_leaves_old_set_then_converges(spark, tmp_path):
 
     # resume with a fresh (unpatched) ingest on the same checkpoint
     ing2 = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=8,
-                           collect_metrics=False, catalog=cat)
+                           catalog=cat)
     ing2.views.append(view)
     ing2.run_to_completion(wal, ckpt, max_files_per_trigger=1)
     snap = cat.snapshot()
@@ -116,7 +115,7 @@ def test_crash_before_flip_leaves_old_set_then_converges(spark, tmp_path):
     # the catalog version must not move
     v_before = snap["version"]
     ing3 = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=8,
-                           collect_metrics=False, catalog=cat)
+                           catalog=cat)
     ing3.views.append(view)
     ing3.run_to_completion(wal, ckpt, max_files_per_trigger=1)
     assert cat.snapshot()["version"] == v_before

@@ -116,7 +116,7 @@ def test_extreme_skew_converges(spark, tmp_path):
     from arlas_proc_spark.cdc.engine import CdcEngine
     from arlas_proc_spark.sources.changefeed import changefeed_df, final_state_sql
 
-    eng = CdcEngine(spark, str(tmp_path / "t"), n_buckets=8, collect_metrics=False)
+    eng = CdcEngine(spark, str(tmp_path / "t"), n_buckets=8)
     eng.replay(changefeed_df(spark, 3000, hot_pct=90))
     got = {(r.repo, r.path): (r.seq, r.content_sha256)
            for r in eng.state().collect()}
@@ -138,7 +138,7 @@ def test_null_key_events_fail_fast(spark, tmp_path):
     from arlas_proc_spark.cdc.engine import CdcEngine
     from arlas_proc_spark.sources.changefeed import changefeed_df
 
-    eng = CdcEngine(spark, str(tmp_path / "t"), n_buckets=4, collect_metrics=False)
+    eng = CdcEngine(spark, str(tmp_path / "t"), n_buckets=4)
     bad = changefeed_df(spark, 50, with_dups=False).withColumn(
         "repo", F.when(F.col("seq") == 7, F.lit(None)).otherwise(F.col("repo")))
     with pytest.raises(Exception, match="[Nn]ull|NOT NULL"):
@@ -259,7 +259,7 @@ def test_mor_streaming_converges(spark, tmp_path):
     wal = str(tmp_path / "wal")
     write_changefeed_batches(spark, wal, 1000, n_batches=3)
     ing = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=4,
-                          collect_metrics=False, write_mode="mor")
+                          write_mode="mor")
     ing.run_to_completion(wal, str(tmp_path / "ckpt"), max_files_per_trigger=1)
     got = {(r.repo, r.path): (r.seq, r.content_sha256)
            for r in ing.state().collect()}
@@ -334,8 +334,9 @@ def test_session_disables_call_site_capture(spark):
 def test_null_key_errors_survive_without_call_site_capture(spark, tmp_path):
     """With call-site capture off, a null key still fails with its own
     message on every path: the engine's driver-side flag
-    (CdcEngine.apply_batch), the merge's executor-side raise_error guard
-    (LakeTable.merge_batch), and a StreamingIngest drain."""
+    (CdcEngine.apply_batch), the executor-side raise_error guard that
+    LakeTable.merge_batch and append_batch share, and a StreamingIngest
+    drain."""
     from pyspark.sql import functions as F
 
     from arlas_proc_spark.lake.table import LakeTable
@@ -351,7 +352,11 @@ def test_null_key_errors_survive_without_call_site_capture(spark, tmp_path):
     with pytest.raises(Exception,
                        match="null key column 'repo' in merge batch"):
         t.merge_batch(bad, 1)
+    with pytest.raises(Exception,
+                       match="null key column 'repo' in merge batch"):
+        t.append_batch(bad, 2)
     assert not t.committed_batch_ids()
+    assert t.read().where("repo IS NULL").count() == 0
 
     wal = str(tmp_path / "wal")
     bad.coalesce(1).write.parquet(f"{wal}/batch_00000")
@@ -368,10 +373,8 @@ def test_two_engines_interleaved_converge(spark, tmp_path):
     from arlas_proc_spark.sources.changefeed import changefeed_df
 
     path = str(tmp_path / "t")
-    a = CdcEngine(spark, path, n_buckets=4, ledger_scope="streamA",
-                  collect_metrics=False)
-    b = CdcEngine(spark, path, n_buckets=4, ledger_scope="streamB",
-                  collect_metrics=False)
+    a = CdcEngine(spark, path, n_buckets=4, ledger_scope="streamA")
+    b = CdcEngine(spark, path, n_buckets=4, ledger_scope="streamB")
     feed = changefeed_df(spark, 4000)
     slices = [feed.where((feed.seq >= i * 1000) & (feed.seq < (i + 1) * 1000))
               for i in range(4)]

@@ -40,7 +40,6 @@ def _state(engine):
 def test_engine_patch_folds_and_sha_tracks_content(spark, tmp_path):
     sparse = _sparse_feed(spark)
     eng = CdcEngine(spark, str(tmp_path / "t"), n_buckets=8,
-                    collect_metrics=False,
                     patch_cols=["lang", "content"])
     assert eng.patch_cols == ["lang", "content", "content_sha256"]
     half = N // 2
@@ -49,7 +48,6 @@ def test_engine_patch_folds_and_sha_tracks_content(spark, tmp_path):
     got = _state(eng)
 
     one = CdcEngine(spark, str(tmp_path / "one"), n_buckets=8,
-                    collect_metrics=False,
                     patch_cols=["lang", "content"])
     one.apply_batch(sparse, 0)
     assert got == _state(one)
@@ -91,14 +89,12 @@ def test_streaming_patch_ingest_converges(spark, tmp_path):
     _write_wal(spark, sparse, wal,
                [(0, 300), (300, 600), (600, 900), (900, N)])
     ing = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=8,
-                          collect_metrics=False,
                           patch_cols=["lang", "content"])
     ing.run_to_completion(wal, str(tmp_path / "ckpt"),
                           max_files_per_trigger=2)
     got = _state(ing.engine)
 
     one = CdcEngine(spark, str(tmp_path / "one"), n_buckets=8,
-                    collect_metrics=False,
                     patch_cols=["lang", "content"])
     one.apply_batch(sparse, 0)
     assert got == _state(one)
@@ -106,7 +102,6 @@ def test_streaming_patch_ingest_converges(spark, tmp_path):
     # exactly-once: re-running the drained stream changes nothing
     v = ing.engine.table.snapshot()["version"]
     ing2 = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=8,
-                           collect_metrics=False,
                            patch_cols=["lang", "content"])
     ing2.run_to_completion(wal, str(tmp_path / "ckpt"),
                            max_files_per_trigger=2)

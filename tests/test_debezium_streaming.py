@@ -33,7 +33,7 @@ def test_debezium_stream_converges_and_quarantines(spark, tmp_path):
     write_debezium_batches(spark, wal, N, n_batches=4, fault_mod=FAULT_MOD)
     qdir = str(tmp_path / "dlq")
     ing = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=8,
-                          collect_metrics=False, wal_format="debezium",
+                          wal_format="debezium",
                           quarantine_dir=qdir)
     ing.run_to_completion(wal, str(tmp_path / "ckpt"),
                           max_files_per_trigger=1)

@@ -304,13 +304,12 @@ def test_streaming_ingest_into_branch(spark, tmp_path):
     wal = str(tmp_path / "wal")
     write_changefeed_batches(spark, wal, n, n_batches=3)
     # seed the table (branch ingest needs an existing table to fork)
-    eng = CdcEngine(spark, str(tmp_path / "t"), n_buckets=8,
-                    collect_metrics=False)
+    eng = CdcEngine(spark, str(tmp_path / "t"), n_buckets=8)
     t = eng.table
     v0 = t.snapshot()["version"]
     t.create_branch("ingest")
     ing = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=8,
-                          collect_metrics=False, branch="ingest")
+                          branch="ingest")
     ing.run_to_completion(wal, str(tmp_path / "ckpt"),
                           max_files_per_trigger=1)
     assert t.snapshot()["version"] == v0  # main never moved

@@ -324,7 +324,7 @@ def test_engine_dv_mode_matches_cow(spark, tmp_path):
     states = {}
     for mode in ("cow", "dv"):
         eng = CdcEngine(spark, str(tmp_path / mode), n_buckets=4,
-                        write_mode=mode, collect_metrics=False)
+                        write_mode=mode)
         for i in range(3):
             eng.apply_batch(feed.where(
                 (F.col("seq") % 3 == i)), f"b{i}")

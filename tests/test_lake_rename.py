@@ -70,6 +70,14 @@ def test_retired_name_refused(spark, tmp_path):
     # append path guards too
     with pytest.raises(ValueError, match="renamed-away"):
         t.append_batch(_batch(spark, [("r0", "f0.py", 100, "cx", "zig")]), 3)
+    # and overwrite: a full replace carrying the old name would commit the
+    # schema [..., language, lang] with every language value null
+    with pytest.raises(ValueError, match="renamed-away"):
+        t.overwrite(_batch(spark, [("r0", "f0.py", 100, "cx", "zig")])
+                    .drop("op"), "ow")
+    assert t.schema.fieldNames() == ["repo", "path", "seq", "commit",
+                                     "language"]
+    assert t.read().count() == 12
 
 
 def test_key_column_rename_keeps_buckets_and_lookup(spark, tmp_path):

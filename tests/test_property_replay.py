@@ -68,7 +68,7 @@ def _oracle(batches) -> dict:
 @given(batches=event_logs())
 def test_any_log_any_split_converges(spark, tmp_path_factory, batches):
     table = str(tmp_path_factory.mktemp("prop") / "t")
-    engine = CdcEngine(spark, table, n_buckets=4, collect_metrics=False)
+    engine = CdcEngine(spark, table, n_buckets=4)
     for i, batch in enumerate(batches):
         if not batch:
             continue
@@ -138,7 +138,7 @@ def test_schema_evolution_under_random_batches(spark, tmp_path_factory,
     live schema; earlier rows read the new columns as null; final state
     matches the pandas oracle across the union schema."""
     table = str(tmp_path_factory.mktemp("prop_ev") / "t")
-    engine = CdcEngine(spark, table, n_buckets=4, collect_metrics=False)
+    engine = CdcEngine(spark, table, n_buckets=4)
     base = ("seq long, op string, repo string, path string, commit string,"
             " ts_s long, lang string, content string")
     for i, (extra, rows) in enumerate(batches):
@@ -203,7 +203,7 @@ def test_incremental_view_always_matches_recompute(spark, tmp_path_factory,
     batches, refresh_after, cdf = spec
     root = tmp_path_factory.mktemp("ivmprop")
     engine = CdcEngine(spark, str(root / "t"), n_buckets=4,
-                       collect_metrics=False, changefeed=cdf)
+                       changefeed=cdf)
     view = IncrementalAggView(
         spark, str(root / "v"), engine.table, ["repo"],
         {"sum_len": "length(content)"}, n_buckets=4)
@@ -280,7 +280,7 @@ def _patch_oracle(batches) -> dict:
 def test_sparse_log_in_order_splits_converge(spark, tmp_path_factory,
                                              batches):
     table = str(tmp_path_factory.mktemp("propp") / "t")
-    engine = CdcEngine(spark, table, n_buckets=4, collect_metrics=False,
+    engine = CdcEngine(spark, table, n_buckets=4,
                        patch_cols=["lang", "content"])
     for i, batch in enumerate(batches):
         if not batch:

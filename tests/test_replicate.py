@@ -113,7 +113,7 @@ def test_streaming_ingest_feeds_replica_chain(spark, tmp_path):
     wal = str(tmp_path / "wal")
     write_changefeed_batches(spark, wal, 2000, n_batches=4)
     ing = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=8,
-                          collect_metrics=False, changefeed=True)
+                          changefeed=True)
     ing.run_to_completion(wal, str(tmp_path / "ck1"),
                           max_files_per_trigger=2)
     rep = ChangeLogReplicator(spark, ing.engine.table,

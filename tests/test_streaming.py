@@ -28,8 +28,7 @@ def _state(ing):
 def test_stream_replay_converges(spark, tmp_path):
     wal = str(tmp_path / "wal")
     write_changefeed_batches(spark, wal, N, n_batches=4)
-    ing = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=8,
-                          collect_metrics=False)
+    ing = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=8)
     ing.run_to_completion(wal, str(tmp_path / "ckpt"), max_files_per_trigger=1)
     assert _state(ing) == _oracle(N)
     # lineage recorded one entry per micro-batch
@@ -42,8 +41,7 @@ def test_stream_kill_and_resume(spark, tmp_path):
     wal = str(tmp_path / "wal")
     ckpt = str(tmp_path / "ckpt")
     write_changefeed_batches(spark, wal, N, n_batches=6)
-    ing = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=8,
-                          collect_metrics=False)
+    ing = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=8)
     # first run: stop after ~half the files
     q = ing.start(wal, ckpt, max_files_per_trigger=1, available_now=True)
     import time
@@ -55,8 +53,7 @@ def test_stream_kill_and_resume(spark, tmp_path):
     assert committed_first  # made some progress
 
     # resume: a fresh ingest over the same checkpoint + table
-    ing2 = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=8,
-                           collect_metrics=False)
+    ing2 = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=8)
     ing2.run_to_completion(wal, ckpt, max_files_per_trigger=1)
     assert _state(ing2) == _oracle(N)
 
@@ -99,7 +96,7 @@ def test_stream_schema_evolution_mid_stream(spark, tmp_path):
     widened = T.StructType(list(EVENT_SCHEMA.fields) +
                            [T.StructField("size", T.LongType(), True)])
     ing = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=4,
-                          collect_metrics=False, event_schema=widened)
+                          event_schema=widened)
     ing.run_to_completion(wal, str(tmp_path / "ckpt"), max_files_per_trigger=1)
 
     schema = {f.name: f.dataType.typeName() for f in ing.engine.table.schema.fields}
@@ -237,7 +234,7 @@ def test_stream_json_wal_segments(spark, tmp_path):
         (df.where((df.seq >= b * sz) & (df.seq < (b + 1) * sz))
            .coalesce(1).write.mode("overwrite").json(f"{wal}/batch_{b:05d}"))
     ing = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=4,
-                          collect_metrics=False, wal_format="json")
+                          wal_format="json")
     ing.run_to_completion(wal, str(tmp_path / "ckpt"), max_files_per_trigger=1)
     assert _state(ing) == _oracle(800)
 
@@ -251,7 +248,7 @@ def test_stream_csv_wal_segments(spark, tmp_path):
            .coalesce(1).write.mode("overwrite")
            .option("header", "true").csv(f"{wal}/batch_{b:05d}"))
     ing = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=4,
-                          collect_metrics=False, wal_format="csv")
+                          wal_format="csv")
     ing.run_to_completion(wal, str(tmp_path / "ckpt"), max_files_per_trigger=1)
     got = _state(ing)
     import duckdb
@@ -267,8 +264,7 @@ def test_fresh_checkpoint_redeploy_not_skipped(spark, tmp_path):
     mistaking them for replays of the old stream's batches 0..N."""
     wal = str(tmp_path / "wal")
     write_changefeed_batches(spark, wal, N, n_batches=4)
-    ing = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=4,
-                          collect_metrics=False)
+    ing = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=4)
     ing.run_to_completion(wal, str(tmp_path / "ckptA"), max_files_per_trigger=1)
     assert _state(ing) == _oracle(N)
 
@@ -280,8 +276,7 @@ def test_fresh_checkpoint_redeploy_not_skipped(spark, tmp_path):
              .withColumn("content", F.concat(F.lit("v2:"), df.content))
     (more.coalesce(1).write.mode("overwrite")
          .parquet(f"{wal}/batch_redeploy"))
-    ing2 = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=4,
-                           collect_metrics=False)
+    ing2 = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=4)
     ing2.run_to_completion(wal, str(tmp_path / "ckptB"),
                            max_files_per_trigger=10)
     final = {(r.repo, r.path): r.content for r in ing2.state().collect()
@@ -296,7 +291,7 @@ def test_mor_streaming_autocompaction(spark, tmp_path):
     wal = str(tmp_path / "wal")
     write_changefeed_batches(spark, wal, N, n_batches=6)
     ing = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=4,
-                          collect_metrics=False, write_mode="mor",
+                          write_mode="mor",
                           compact_every=2)
     ing.run_to_completion(wal, str(tmp_path / "ckpt"), max_files_per_trigger=1)
     assert _state(ing) == _oracle(N)
@@ -316,7 +311,7 @@ def test_stream_orc_wal_segments(spark, tmp_path):
         (df.where((df.seq >= b * 200) & (df.seq < (b + 1) * 200))
            .coalesce(1).write.mode("overwrite").orc(f"{wal}/batch_{b:05d}"))
     ing = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=4,
-                          collect_metrics=False, wal_format="orc")
+                          wal_format="orc")
     ing.run_to_completion(wal, str(tmp_path / "ckpt"), max_files_per_trigger=1)
     assert _state(ing) == _oracle(800)
 
@@ -329,8 +324,7 @@ def test_streaming_views_ride_the_ingest_loop(spark, tmp_path):
 
     wal = str(tmp_path / "wal")
     write_changefeed_batches(spark, wal, N, n_batches=4)
-    ing = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=8,
-                          collect_metrics=False)
+    ing = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=8)
     view = IncrementalAggView(spark, str(tmp_path / "view"),
                               ing.engine.table, ["repo"],
                               {"sum_len": "length(content)"}, n_buckets=8)
@@ -344,7 +338,7 @@ def test_streaming_views_ride_the_ingest_loop(spark, tmp_path):
     assert inc == full and len(inc) > 0
     # redelivered drain: table ledger skips, view cursor no-ops
     ing2 = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=8,
-                           collect_metrics=False, views=[view])
+                           views=[view])
     ing2.run_to_completion(wal, str(tmp_path / "ckpt"),
                            max_files_per_trigger=2)
     assert {r.repo: (r.n_rows, r.sum_len)
@@ -394,7 +388,7 @@ def test_state_partitions_sizing_kill_resume(spark, tmp_path):
 
     # partial drain, then "crash"
     ing = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=4,
-                          collect_metrics=False, state_partitions=2)
+                          state_partitions=2)
     q = ing.start(wal, str(tmp_path / "ckpt"), max_files_per_trigger=2,
                   available_now=False)
     q.processAllAvailable()
@@ -406,7 +400,7 @@ def test_state_partitions_sizing_kill_resume(spark, tmp_path):
     extra = changefeed_df(spark, 2 * N, start=N)
     extra.coalesce(1).write.mode("overwrite").parquet(f"{wal}/batch_99990")
     ing2 = StreamingIngest(spark, str(tmp_path / "t"), n_buckets=4,
-                           collect_metrics=False, state_partitions=2)
+                           state_partitions=2)
     ing2.run_to_completion(wal, str(tmp_path / "ckpt"),
                            max_files_per_trigger=2)
     assert spark.conf.get("spark.sql.shuffle.partitions") == orig
