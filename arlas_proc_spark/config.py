@@ -1,7 +1,17 @@
 """SparkSession factory tuned for the CDC engine.
 
 Defaults follow the public Spark performance guidance: AQE on, Arrow on,
-shuffle partitions sized to cores (not the 200 default), UTC session tz.
+UTC session tz, and shuffle partitions equal to the task slots (not the
+200 default). A micro-batch does little per-row work, so every task is
+mostly fixed cost: at local[N] a stage of N tasks runs in one wave, one
+of more than N in several.
+
+Local masters also run Python tasks under ``worker_daemon``, which stops
+each task from re-reading ``pyspark.zip``'s directory. The package root
+goes on the workers' ``PYTHONPATH`` so that the daemon, and UDFs pickled
+by reference, import from any driver working directory.
+Other masters keep PySpark's stock daemon: their executors need not have
+this package installed.
 
 Note: ``getOrCreate`` returns any ALREADY-RUNNING session unchanged —
 master, driver memory, and shuffle width from a prior ``build_session``
@@ -15,6 +25,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def build_session(
     app_name: str = "arlas_proc_spark",
@@ -24,9 +36,8 @@ def build_session(
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or f"local[{cpus}]"
-    # in local[N], shuffle width = cores is the right default
-    n_threads = cpus if master == "local[*]" else _master_threads(master, cpus)
-    shuffle_partitions = shuffle_partitions or max(n_threads, 4)
+    # in local[N], shuffle width = task slots: one wave per stage
+    shuffle_partitions = shuffle_partitions or _master_threads(master, cpus)
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -56,6 +67,10 @@ def build_session(
         # task's agg/sort state, so size it to the host, not the default 1g
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
     )
+    if master == "local" or master.startswith("local["):
+        b = (b.config("spark.python.daemon.module",
+                      "arlas_proc_spark.worker_daemon")
+             .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT))
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
@@ -64,10 +79,14 @@ def build_session(
 
 
 def _master_threads(master: str, default: int) -> int:
+    """Task slots of a local master (``local``, ``local[N]``,
+    ``local[N,F]``, ``local[*]``); ``default`` for any other master."""
+    if master == "local":
+        return 1
     if master.startswith("local[") and master.endswith("]"):
-        inner = master[6:-1]
+        inner = master[6:-1].split(",")[0]
         if inner == "*":
-            return os.cpu_count() or default
+            return default
         try:
             return int(inner)
         except ValueError:

@@ -4184,13 +4184,15 @@ class LakeTable(TableIO):
             if not dry_run:
                 shutil.rmtree(path, ignore_errors=True)
         class _VanishedMidScan(Exception):
-            # a wap/branch metadata file disappeared between listing and
-            # open: either a drop/abandon (its files became orphans) or a
-            # publish/fast_forward (its files are now referenced by a NEW
-            # snapshot the scan's keep set predates). Both resolve by
-            # RE-SCANNING from a fresh listing — continuing with the
-            # stale sets could let a just-published long-staged file slip
-            # into the deletion sweep (published snapshot → missing data)
+            # a metadata file disappeared between listing and open. A
+            # wap/branch file: a drop/abandon (its files became orphans)
+            # or a publish/fast_forward (its files are now referenced by
+            # a NEW snapshot the scan's keep set predates). A retained or
+            # tag-pinned v*.json: a concurrent expire (smaller keep_last,
+            # or after a drop_tag) removed it. All resolve by RE-SCANNING
+            # from a fresh listing — continuing with the stale sets could
+            # let a just-published long-staged file slip into the
+            # deletion sweep (published snapshot → missing data)
             pass
 
         def _scan():
@@ -4249,7 +4251,9 @@ class LakeTable(TableIO):
                     with open(os.path.join(self.meta_dir, name)) as f:
                         snap = self._wrap_snap(json.load(f))
                 except OSError:
-                    if name in waps or name in branch_snaps:
+                    # a snapshot that is still CURRENT cannot
+                    # legitimately vanish; anything else is a race
+                    if name != current or self._current_name() != current:
                         raise _VanishedMidScan(name)
                     raise
                 refs["manifests"].update(
@@ -4287,7 +4291,7 @@ class LakeTable(TableIO):
             # racers on every attempt: fail the maintenance run safely
             # (nothing deleted) rather than risk sweeping a racer's files
             raise OSError(
-                f"expire_snapshots: staged metadata kept vanishing "
+                f"expire_snapshots: metadata kept vanishing "
                 f"mid-scan across retries (last: {last_race}); a writer "
                 f"is publishing/dropping concurrently — re-run "
                 f"maintenance") from last_race

@@ -195,6 +195,57 @@ def test_expire_snapshots_gc(spark, tmp_path):
     assert t.read(snapshot=old).count() in (3, 4)
 
 
+@pytest.mark.parametrize("pinned_by", ["keep_last", "tag"])
+def test_expire_rescans_when_retained_snapshot_vanishes(
+        spark, tmp_path, monkeypatch, pinned_by):
+    """A concurrent expire removes a snapshot this run's scan retained
+    (keep_last, or a tag that a racer drops first) between the scan's
+    listing and its open. The run must re-scan from a fresh listing and
+    finish, not abort on the raw OSError."""
+    t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA,
+                         ["repo", "path"], "seq", n_buckets=2)
+    for i in range(4):
+        t.merge_batch(_batch(spark, [
+            _ev(i, "insert", "r", f"f{i}", f"c{i}", f"v{i}")]), i)
+    if pinned_by == "tag":
+        t.set_tag("pin", version=1)
+    victim = os.path.join(t.meta_dir, "v0000000001.json" if pinned_by == "tag"
+                          else sorted(f for f in os.listdir(t.meta_dir)
+                                      if f.startswith("v"))[-2])
+    real_listdir = os.listdir
+    state = {"meta_listings": 0, "racing": False}
+
+    def racer():
+        # the concurrent maintenance run, at the scan's second metadata
+        # listing: after the keep set is fixed, before its files open
+        state["racing"] = True
+        try:
+            if pinned_by == "tag":
+                t.drop_tag("pin")
+            t.expire_snapshots(keep_last=1)
+        finally:
+            state["racing"] = False
+
+    def racing_listdir(p):
+        names = real_listdir(p)
+        if not state["racing"] and \
+                os.path.abspath(p) == os.path.abspath(t.meta_dir):
+            state["meta_listings"] += 1
+            if state["meta_listings"] == 2:
+                racer()
+        return names
+
+    import arlas_proc_spark.lake.table as table_mod
+    monkeypatch.setattr(table_mod.os, "listdir", racing_listdir)
+    res = t.expire_snapshots(keep_last=2)
+    monkeypatch.undo()
+    assert not os.path.exists(victim)      # the race really fired
+    assert state["meta_listings"] > 3      # ... and the scan re-ran
+    assert res["snapshots_expired"] >= 0
+    assert t.read().count() == 4
+    assert "pin" not in t.snapshot().get("tags", {})
+
+
 def test_expire_age_retention_and_dry_run(spark, tmp_path):
     """older_than_s keeps young snapshots past keep_last (Iceberg's
     expire_snapshots(older_than, retain_last)); dry_run reports a real

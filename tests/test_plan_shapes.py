@@ -236,6 +236,34 @@ def test_merge_write_is_shuffle_once(spark, tmp_path, monkeypatch):
         assert _table_state(t) == _lww_oracle([_B0, _B1]), n
 
 
+def test_merge_width_follows_two_task_slots(spark, tmp_path, monkeypatch):
+    """At P = 2 (build_session's default at local[2]) a 16-bucket merge
+    exchanges both join inputs at width 2, the smallest divisor of 16
+    that is >= 2, and still writes one file per touched bucket."""
+    from arlas_proc_spark.lake.table import LakeTable
+    plans = _capture_data_writes(monkeypatch)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "2")
+    try:
+        t = LakeTable.create(spark, str(tmp_path / "t"), _merge_schema(),
+                             ["repo", "path"], "seq", n_buckets=16)
+        t.merge_batch(_merge_batch_df(spark, _B0), 0)
+        del plans[:]
+        t.merge_batch(_merge_batch_df(spark, _B1), 1)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert len(plans) == 1
+    top, frontier, every = _write_plan_shape(plans[0])
+    assert "ShuffledHashJoin" in top, top
+    assert sorted(p.split("_")[1] for p in frontier) == ["e", "n"], frontier
+    assert all(p.endswith(", 2)") for p in frontier), frontier
+    assert sum("_e_repo" in p for p in every) == 1, every
+    assert sum("_n_repo" in p for p in every) == 1, every
+    files = {b: len(fs) for b, fs in t.snapshot()["buckets"].items() if fs}
+    assert len(files) > 2 and set(files.values()) == {1}, files
+    assert _table_state(t) == _lww_oracle([_B0, _B1])
+
+
 def test_merge_mid_rebucket_keeps_write_repartition(spark, tmp_path,
                                                     monkeypatch):
     """Mid-rebucket the router's transitional ids break the join
