@@ -14,7 +14,6 @@ sys.path.insert(0, "/root/repo")
 from arlas_proc_spark.config import build_session
 from arlas_proc_spark.cdc.engine import CdcEngine, lww_compact, prepare_events
 from arlas_proc_spark.sources.changefeed import changefeed_df
-from pyspark.sql import functions as F
 
 cpus = int(sys.argv[1]); N = int(sys.argv[2]); reps = int(sys.argv[3])
 GEN = dict(n_repos=200, files_per_repo=2000)
@@ -25,8 +24,6 @@ def noop(df): df.write.format("noop").mode("overwrite").save()
 
 stages = {
     "gen": lambda: noop(feed),
-    "narrow_agg": lambda: feed.groupBy("repo", "path").agg(
-        F.max(F.struct("seq", "commit")).alias("m")).count(),
     "compact": lambda: noop(lww_compact(feed)),
     "compact_sha": lambda: noop(prepare_events(lww_compact(feed))),
 }

@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from arlas_proc_spark.lake.lww import latest_per_key
 from arlas_proc_spark.lake.table import LakeTable, _ledger_contains
 from arlas_proc_spark.operators.ann import (
     _ivf_assign_kernel,
@@ -189,11 +190,8 @@ class AnnIndex:
         assign = _ivf_assign_kernel(self._cids, self._cent_mat, 1,
                                     self.assign_round, with_sim=True)
         assigned = batch.withColumn("_asg", assign(F.col(self.vec_col)))
-        w = Window.partitionBy(idc).orderBy(
-            F.col(seq_col).desc(), F.col(op_col).desc(),
-            F.col(self.vec_col).desc_nulls_last())
-        winners = (assigned.withColumn("_rn", F.row_number().over(w))
-                   .where(F.col("_rn") == 1).drop("_rn"))
+        winners = latest_per_key(assigned, [idc],
+                                 [seq_col, op_col, self.vec_col])
         idt = self._ID_TYPES[self.id_type].simpleString()
         guard = F.when(
             F.col(self.vec_col).isNotNull(), F.col(idc).cast(idt)) \

@@ -45,8 +45,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
+from arlas_proc_spark.lake.lww import latest_per_key
 from arlas_proc_spark.lake.table import LakeTable
 from arlas_proc_spark.operators.base import require_columns
 from arlas_proc_spark.operators.dedup_fuzzy import (
@@ -154,11 +154,7 @@ class DedupIndex:
         # LWW-compact the batch per doc: max seq wins; ties (same seq
         # delivered twice, possibly with different op) break
         # deterministically by op then text so replays pick the same row
-        w = Window.partitionBy(idc).orderBy(
-            F.col(seq_col).desc(), F.col(op_col).desc(),
-            F.col(text_col).desc_nulls_last())
-        winners = (batch.withColumn("_rn", F.row_number().over(w))
-                   .where(F.col("_rn") == 1).drop("_rn"))
+        winners = latest_per_key(batch, [idc], [seq_col, op_col, text_col])
         ups = winners.where(F.col(op_col) != delete_value)
         sigs = (minhash_signatures(ups, idc, text_col, self.n, self.k)
                 .join(ups.select(idc, seq_col), idc)

@@ -21,7 +21,8 @@ from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
 from arlas_proc_spark.functions.content import with_content_hash, with_normalized_lang
-from arlas_proc_spark.lake.table import LakeTable, lww_argmax
+from arlas_proc_spark.lake.lww import latest_by_max, max_per_key
+from arlas_proc_spark.lake.table import LakeTable
 
 KEY_COLS = ["repo", "path"]
 SEQ_COL = "seq"
@@ -49,14 +50,13 @@ TABLE_SCHEMA = T.StructType([
 ])
 
 
-def prepare_events(events: DataFrame, *, vectorized: bool = True,
-                   normalize: bool = False) -> DataFrame:
+def prepare_events(events: DataFrame, *, normalize: bool = False) -> DataFrame:
     """Row-level transforms before merge, all Arrow-vectorized.
 
     ``normalize=False`` by default: the correctness oracle compares raw
     lang; pipelines wanting canonical tags opt in.
     """
-    out = with_content_hash(events, vectorized=vectorized)
+    out = with_content_hash(events)
     if normalize:
         out = with_normalized_lang(out)
     return out
@@ -64,7 +64,7 @@ def prepare_events(events: DataFrame, *, vectorized: bool = True,
 
 class CdcEngine:
     def __init__(self, spark: SparkSession, table_path: str, *,
-                 n_buckets: int = 16, vectorized_udfs: bool = True,
+                 n_buckets: int = 16,
                  broadcast_key_limit: int = 5_000_000,
                  ledger_scope: str = "default",
                  write_mode: str = "cow",
@@ -76,8 +76,8 @@ class CdcEngine:
                  branch: str | None = None,
                  row_lineage: bool = False):
         """``broadcast_key_limit``: batches touching more distinct keys
-        than this fall back from the broadcast join-back to the wide-argmax
-        compaction — the winner set must fit in every executor for a
+        than this join the winners back unhinted, so the planner and AQE
+        pick the join — the winner set must fit in every executor for a
         broadcast, and ~5M keys ≈ a few hundred MB build side, the edge of
         comfortable at typical executor memory.
 
@@ -127,7 +127,6 @@ class CdcEngine:
         event-level fold does the compaction."""
         self.spark = spark
         self.quarantine_dir = quarantine_dir
-        self.vectorized = vectorized_udfs
         self.broadcast_key_limit = broadcast_key_limit
         self.ledger_scope = ledger_scope
         self.commit_retries = 2  # re-merge attempts on ConcurrentCommitError
@@ -239,13 +238,13 @@ class CdcEngine:
         MERGE join itself needs the compacted winners. Bucket = pmod(hash(
         key), N) depends on the KEY only — so instead of persisting the full
         payload winners (content strings dominate; the old bottleneck, see
-        BENCH/BASELINE.md), persist just the NARROW argmax frame (~40
+        BENCH/BASELINE.md), persist just the NARROW max-seq winners (~40
         bytes/key), derive touched buckets from it, and reuse it as the
         broadcast build side of the join-back. The heavy payload pipeline
         (probe + sha256) then runs exactly ONCE, inside the merge's write
         action, with zero payload cached. Requires a replayable source
         (immutable WAL segments / deterministic generator): the feed is
-        scanned twice (argmax pass, probe pass) and the winning (key, seq)
+        scanned twice (max pass, probe pass) and the winning (key, seq)
         rows must appear in both — the WAL contract guarantees it.
 
         Full replays (assume_all_buckets) take the same winners-persist
@@ -256,8 +255,7 @@ class CdcEngine:
         if self.quarantine_dir is not None:
             events, n_bad = self._quarantine_null_keys(events, batch_id)
             extra_metrics = {"rows_quarantined": n_bad}
-        winners = (events.groupBy(*KEY_COLS)
-                   .agg(F.max(SEQ_COL).alias(SEQ_COL))
+        winners = (max_per_key(events, KEY_COLS, SEQ_COL)
                    .persist(StorageLevel.MEMORY_AND_DISK))
         try:
             snap = self.table.snapshot()
@@ -317,8 +315,6 @@ class CdcEngine:
             # would stall at the gap and `pending` would grow unboundedly
             # on a long tail. n_keys==0 covers BOTH modes (touched is None
             # in mor mode, so it cannot stand in for emptiness).
-            # giant batches (winner set too big to broadcast) compact via
-            # the wide argmax instead
             if n_keys == 0:
                 return self.table.commit_empty_batch(
                     batch_id, scope=self.ledger_scope,
@@ -330,11 +326,12 @@ class CdcEngine:
                 # a null content is null, so the derived column folds with
                 # its base) and let the merge's event-level fold compact
                 compacted = events
-            elif n_keys > self.broadcast_key_limit:
-                compacted = lww_compact(events, strategy="agg")
             else:
-                compacted = lww_compact(events, winners=winners)
-            prepared = prepare_events(compacted, vectorized=self.vectorized)
+                # a winner set too big to broadcast joins back unhinted
+                compacted = lww_compact(events, winners=(
+                    F.broadcast(winners)
+                    if n_keys <= self.broadcast_key_limit else winners))
+            prepared = prepare_events(compacted)
             if self.write_mode == "mor":
                 return self.table.append_batch(
                     prepared, batch_id, batch_compacted=True,
@@ -432,35 +429,25 @@ class CdcEngine:
 
 
 def lww_compact(events: DataFrame, key_cols: list[str] = KEY_COLS,
-                seq_col: str = SEQ_COL, strategy: str = "broadcast",
+                seq_col: str = SEQ_COL,
                 winners: DataFrame | None = None) -> DataFrame:
     """One row per key: the latest event by (seq, commit) — deletes kept
     (the merge needs them as tombstones). The scalable, deterministic
     formulation of the reference's arbitrary ``dropDuplicates``
     (``tools/DataFrameFormatter.scala:47-49``).
 
-    strategy='broadcast' (default, the micro-batch path): a NARROW argmax
-    — groupBy(key).agg(max(seq)) — then a broadcast join-back to fetch the
-    winning rows' payload. ``seq`` is the WAL position, unique per event,
-    so a pure-numeric max fully determines the winner; a long-typed max is
-    a HashAggregate with map-side partials inside whole-stage codegen
-    (max over struct/string buffers falls back to a non-codegen
-    SortAggregate that sorts every group). The narrow agg keeps per-task
-    hash maps at ~40 bytes/key, so it scales with cores; carrying the full
-    payload (content, hashes) through the aggregation instead measured
-    2.6x SLOWER at 32 threads than at 8 (cache/memory-bandwidth collapse
-    on wide hash-map entries). The big side streams map-side with zero
-    shuffle. Use while distinct keys per batch ≲ 10^7 (winner set must
-    broadcast).
+    The narrow LWW kernel (``lake.lww.latest_by_max``): max(seq) per key,
+    then a left-semi join back to the winning rows. ``seq`` is the WAL
+    position, unique per event, so a pure-numeric max fully determines
+    the winner; a long-typed max is a HashAggregate with map-side
+    partials inside whole-stage codegen, at ~40 bytes/key. The big side
+    streams map-side with zero shuffle when the winners broadcast.
 
-    strategy='agg': single wide argmax — ``lake.table.lww_argmax``, the
-    merge's own in-batch compaction. No join, no broadcast limit; right
-    when the winner set is too large to broadcast (giant replay batches)
-    and cores are few.
-
-    ``winners``: optionally a precomputed (persisted) narrow argmax frame
-    with columns [*key_cols, seq_col] — lets a caller share one argmax
-    pass between bucket discovery and this join-back (CdcEngine.apply_batch).
+    ``winners``: a precomputed (persisted) ``lake.lww.max_per_key`` frame
+    — lets a caller share one max pass between bucket discovery and this
+    join-back (CdcEngine.apply_batch). Wrap it in ``F.broadcast`` to force
+    the broadcast join; unhinted, the planner and AQE decide. Without it
+    the winners are computed here and broadcast.
     """
     # WAL contract: key columns are NOT NULL. Without this guard a
     # null-key event would silently vanish in the equi-join below (null
@@ -471,19 +458,16 @@ def lww_compact(events: DataFrame, key_cols: list[str] = KEY_COLS,
                 F.raise_error(F.lit(
                     f"null key column '{k}' in change feed "
                     f"(key columns are NOT NULL)"))))
-    if strategy == "agg":
-        return lww_argmax(events, key_cols, seq_col)
     if winners is None:
-        winners = events.groupBy(*key_cols).agg(F.max(seq_col).alias(seq_col))
-    joined = events.join(F.broadcast(winners),
-                         on=[*key_cols, seq_col], how="inner")
+        winners = F.broadcast(max_per_key(events, key_cols, seq_col))
     # duplicate deliveries of the winning event survive the join; they are
     # byte-identical (same WAL position ⇒ same commit, same payload), so
     # distinct over ALL columns removes them — and unlike
     # dropDuplicates(key), which plans First() aggs over string buffers
     # (non-codegen SortAggregate), an all-column distinct is a zero-buffer
     # HashAggregate with map-side partials (tiny input: winners only)
-    return joined.select(*events.columns).dropDuplicates()
+    return (latest_by_max(events, key_cols, seq_col, winners)
+            .select(*events.columns).dropDuplicates())
 
 
 def lww_resolve(events: DataFrame, key_cols: list[str] = KEY_COLS,

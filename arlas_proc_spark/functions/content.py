@@ -7,9 +7,8 @@ payload here is source code, not geometry, so the row-level kernel is
 content hashing + language canonicalization. Per the engine contract, all
 of it is Arrow-batched pandas UDFs — never per-row Python.
 
-Note ``F.sha2`` is a JVM built-in and is what production plans should use;
-``sha256_content`` exists to honor the vectorized-pandas-UDF contract and is
-verified byte-identical to ``F.sha2(col, 256)`` in tests.
+``sha256_content`` honors the vectorized-pandas-UDF contract and is verified
+byte-identical to the JVM built-in ``F.sha2(col, 256)`` in tests.
 """
 
 from __future__ import annotations
@@ -17,7 +16,7 @@ from __future__ import annotations
 import hashlib
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -61,15 +60,10 @@ def normalize_lang(s: pd.Series) -> pd.Series:
 
 
 def with_content_hash(df: DataFrame, content_col: str = "content",
-                      out_col: str = "content_sha256", vectorized: bool = True) -> DataFrame:
-    """Append the sha256(content) invariant column.
-
-    ``vectorized=True`` uses the Arrow pandas UDF (engine contract);
-    ``False`` uses the JVM built-in ``sha2`` (fast path — same bytes).
-    """
-    col: Column = (sha256_content(F.col(content_col)) if vectorized
-                   else F.sha2(F.col(content_col), 256))
-    return df.withColumn(out_col, col)
+                      out_col: str = "content_sha256") -> DataFrame:
+    """Append the sha256(content) invariant column, computed by the Arrow
+    pandas UDF (engine contract; the same bytes as the JVM ``sha2``)."""
+    return df.withColumn(out_col, sha256_content(F.col(content_col)))
 
 
 def with_normalized_lang(df: DataFrame, lang_col: str = "lang",

@@ -59,6 +59,7 @@ from pyspark.sql.types import (
 
 from arlas_proc_spark.lake.cas import DEFAULT_CAS, CasConflict, CommitCAS
 from arlas_proc_spark.lake.io import TableIO
+from arlas_proc_spark.lake.lww import latest_by_seq
 from arlas_proc_spark.lake.schema_evolution import align_to_schema, evolve_schema
 
 _BUCKET = "_bucket"
@@ -937,8 +938,8 @@ class LakeTable(TableIO):
             parts.append(_mask(_scan(cow_entries)))
         if mor_entries:
             # mask BEFORE LWW: a dv-dead generation must never win
-            parts.append(_resolve_lww(_mask(_scan(mor_entries)),
-                                      snap["key_cols"], snap["seq_col"]))
+            parts.append(latest_by_seq(_mask(_scan(mor_entries)),
+                                       snap["key_cols"], snap["seq_col"]))
         df = reduce(lambda a, b: a.unionByName(b), parts)
         if not with_tombstones:
             df = df.where(~F.coalesce(F.col(_TOMB), F.lit(False))).drop(_TOMB)
@@ -1117,9 +1118,10 @@ class LakeTable(TableIO):
             return {"batch_id": bid, "skipped": True}
         key_cols = snap["key_cols"]
         lineage = bool(snap.get("row_lineage"))
-        df = _resolve_lww(self.read(snapshot=snap, with_tombstones=True,
-                                    with_row_ids=lineage),
-                          key_cols, snap["seq_col"])
+        # read() already resolves mor generations and applies dv masks,
+        # and a key lives in one bucket: one row per key, no second LWW
+        df = self.read(snapshot=snap, with_tombstones=True,
+                       with_row_ids=lineage)
         sort_cols, stats_cols = _clustered_layout(
             snap, cluster_by, df, cluster_mode=cluster_mode)
         out = df.withColumn(_BUCKET, bucket_expr(key_cols, new_n_buckets))
@@ -2344,22 +2346,23 @@ class LakeTable(TableIO):
                        batch_compacted: bool) -> tuple[DataFrame, DataFrame]:
         """Merge stage 2: tag every event with its routed bucket, then
         compact to one row per key (the join needs unique keys on both
-        sides) with the wide LWW argmax — safe at any size, no broadcast
-        limit — unless the caller already did. Returns (tagged, resolved):
-        bucket discovery reads the uncompacted ``tagged``.
+        sides) with the LWW window (``lww.latest_by_seq``) — safe at any
+        size, no broadcast limit — unless the caller already did. Returns
+        (tagged, resolved): bucket discovery reads the uncompacted
+        ``tagged``.
 
-        With ``patch_cols`` the same aggregation pass also folds, per key,
+        With ``patch_cols`` the same window partition also folds, per key,
         (a) the latest in-batch delete's (seq, commit) and (b) per patch
         column the latest non-null value's (seq, commit, value). The
         latest non-null overall IS the latest non-null after the delete
         whenever it ranks above the delete, so one max per column
-        suffices — no second pass, no window."""
+        suffices — no second pass."""
         tagged = batch.withColumn(_BUCKET, routed_bucket_expr(snap))
         if batch_compacted:
             return tagged, tagged
         key_cols, seq_col = snap["key_cols"], snap["seq_col"]
         if not patch_cols:
-            return tagged, lww_argmax(tagged, key_cols, seq_col)
+            return tagged, latest_by_seq(tagged, key_cols, seq_col)
         rank = [F.col(seq_col).alias("s"),
                 (F.col("commit") if "commit" in tagged.columns
                  else F.lit("")).alias("c")]
@@ -2368,7 +2371,7 @@ class LakeTable(TableIO):
         for c in patch_cols:
             folds[f"_pf_{c}"] = F.max(F.when(
                 F.col(c).isNotNull(), F.struct(*rank, F.col(c).alias("v"))))
-        compacted = lww_argmax(tagged, key_cols, seq_col, folds)
+        compacted = latest_by_seq(tagged, key_cols, seq_col, folds)
 
         def _folded(c):
             p = F.col(f"_pf_{c}")
@@ -2393,7 +2396,7 @@ class LakeTable(TableIO):
         Bucket discovery is a tiny aggregation (≤ n_buckets groups,
         map-side partials, no wide shuffle). Full-log replays skip it
         (``assume_all_buckets``); callers that already know the set
-        (CdcEngine derives it from the narrow argmax winners) pass
+        (CdcEngine derives it from its narrow max-seq winners) pass
         ``touched_buckets`` so the batch plan is consumed exactly once.
         Mid-rebucket, caller-computed sets (engine and IVM use the plain
         old-spec transform) don't know the router, so discovery always
@@ -3855,7 +3858,7 @@ class LakeTable(TableIO):
         key_cols = snap["key_cols"]
         schema, _ = self._evolve_stage(snap, batch, op_col)
         resolved = batch if batch_compacted \
-            else lww_argmax(batch, key_cols, snap["seq_col"])
+            else latest_by_seq(batch, key_cols, snap["seq_col"])
         has = set(resolved.columns)
         obs = Observation()
         out = (resolved.select(
@@ -3945,7 +3948,7 @@ class LakeTable(TableIO):
         key_cols, seq_col = snap["key_cols"], snap["seq_col"]
         schema, _ = self._evolve_stage(snap, df)
         if seq_col in df.columns:
-            df = lww_argmax(df, key_cols, seq_col)
+            df = latest_by_seq(df, key_cols, seq_col)
         has = set(df.columns)
         out = df.select(
             *[_batch_col(f, has, key_cols).alias(f.name)
@@ -4451,39 +4454,6 @@ def _scope_state(led: dict, scope: str) -> dict:
         scopes["default"] = {"watermark": led.pop("watermark"),
                              "pending": led.pop("pending", [])}
     return scopes.setdefault(scope, {"watermark": -1, "pending": []})
-
-
-def _resolve_lww(df: DataFrame, key_cols: list[str], seq_col: str) -> DataFrame:
-    """Read-time LWW over multi-generation (appended) rows: one row per
-    key, max (seq, commit) — the same winner rule the MERGE uses (null seq
-    loses to any real seq). Exact (seq, commit) ties are WAL-contract
-    violations (seq is the unique log position); among byte-identical
-    duplicate deliveries the pick is arbitrary and harmless."""
-    from pyspark.sql.window import Window
-    order = [F.coalesce(F.col(seq_col), F.lit(-1).cast("long")).desc()]
-    if "commit" in df.columns:
-        order.append(F.coalesce(F.col("commit"), F.lit("")).desc())
-    w = Window.partitionBy(*key_cols).orderBy(*order)
-    return (df.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1).drop("_rn"))
-
-
-def lww_argmax(df: DataFrame, key_cols: list[str], seq_col: str,
-               folds: dict | None = None) -> DataFrame:
-    """Wide LWW argmax: one row per key, the latest by (seq, commit) —
-    ``max(struct(seq, commit, payload…))``, the same winner rule every
-    merge uses. No join and no broadcast limit, so it is safe at any
-    batch size; every writer that compacts a batch (merge, append,
-    overwrite, ``cdc.engine.lww_compact(strategy='agg')``) uses this one.
-    ``folds`` ({name: aggregate Column}) ride the same aggregation pass
-    and come out as extra columns next to the winner's."""
-    ord_first = [seq_col] + (["commit"] if "commit" in df.columns else [])
-    ordered = ord_first + [c for c in df.columns if c not in ord_first]
-    folds = folds or {}
-    return (df.groupBy(*key_cols)
-            .agg(F.max(F.struct(*ordered)).alias("_w"),
-                 *[agg.alias(name) for name, agg in folds.items()])
-            .select(*[F.col("_w")[c].alias(c) for c in df.columns], *folds))
 
 
 def _batch_col(f: StructField, have: set, key_cols: list[str]):

@@ -36,6 +36,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from arlas_proc_spark.lake.lww import latest_by_max
+
 DLQ_REASON = "_dlq_reason"
 RAW_VALUE = "_raw_value"
 
@@ -215,10 +217,9 @@ def compact_debezium_batch(decoded: DataFrame,
     """One drained envelope range may span several producer commits
     touching the same key; keep each key's NEWEST transition by ``_txid``
     (from ``decode_debezium(txid_field=...)``) so the batch is mergeable
-    as one action per key. Numeric max + left-semi join-back, NOT
-    ``max(struct(...))`` — the engine-wide argmax discipline (a struct
-    aggregation buffer plans as non-codegen SortAggregate); ``(key,
-    _txid)`` is unique because one commit emits at most one non-preimage
+    as one action per key. The narrow LWW kernel (``lake/lww.py``
+    latest_by_max): numeric max + left-semi join-back; ``(key, _txid)``
+    is unique because one commit emits at most one non-preimage
     transition per key, so the semi join keeps exactly one row. The same
     compaction the lake-to-lake replicator applies to its change files
     (streaming/replicate.py _compact_changes), at the Debezium
@@ -241,10 +242,7 @@ def compact_debezium_batch(decoded: DataFrame,
              "transaction id field is missing/unset for some rows, so "
              "transitions cannot be ordered; fix txid_field= on "
              "decode_debezium or compact upstream"))))
-    winners = (decoded.groupBy(*key_cols)
-               .agg(F.max("_txid").alias("_txid")))
-    return (decoded.join(winners, [*key_cols, "_txid"], "left_semi")
-            .drop("_txid"))
+    return latest_by_max(decoded, key_cols, "_txid").drop("_txid")
 
 
 def encode_debezium_sql(row_cols: tuple[str, ...] = (

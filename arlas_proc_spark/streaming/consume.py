@@ -33,7 +33,7 @@ source's schema is pinned at construction; pass a widened
 
 At scale: the source is O(changed rows) per trigger (change files are
 append-only, never rewritten — no table scans, no snapshot diffs); the
-net compaction is the engine-wide numeric-argmax shape (map-side
+net compaction is the narrow LWW kernel (``lake/lww.py``: map-side
 long-max + semi join-back, AQE broadcasts the winner side when small);
 the relay is map-only after that. Nothing here reads table data.
 
@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from arlas_proc_spark.lake.lww import latest_by_max
 from arlas_proc_spark.lake.table import LakeTable
 from arlas_proc_spark.streaming.replicate import ChangeLogReplicator
 
@@ -112,12 +113,8 @@ class ChangeFeedConsumer:
                 batch_df = batch_df.where(
                     F.col("_change_version") > F.lit(self.since_version))
             if self.net_only:
-                winners = (batch_df.groupBy(*self.key_cols)
-                           .agg(F.max("_change_version")
-                                .alias("_change_version")))
-                batch_df = batch_df.join(
-                    winners, [*self.key_cols, "_change_version"],
-                    "left_semi")
+                batch_df = latest_by_max(batch_df, self.key_cols,
+                                         "_change_version")
             self.apply_fn(batch_df, batch_id)
 
         writer = (raw.writeStream.foreachBatch(_apply)

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from arlas_proc_spark.lake.lww import latest_by_max
 from arlas_proc_spark.lake.table import LakeTable
 
 
@@ -42,11 +43,10 @@ def _compact_changes(batch_df: DataFrame, key_cols: list[str]) -> DataFrame:
     columns cannot order transitions within a batch (across batches the
     merge's tie-goes-to-batch rule handles it).
 
-    Shape: numeric max + left-semi join-back, NOT max(struct(...)) — a
-    struct/string aggregation buffer plans as non-codegen SortAggregate
-    (the engine-wide argmax discipline, see plans/diagnostics.py
-    sort_aggs); the long-max compacts map-side and the winner frame is
-    ~key+8B/row. The join is NOT hint-forced to broadcast: a catch-up
+    Shape: the narrow LWW kernel (``lake/lww.py`` latest_by_max) —
+    numeric max + left-semi join-back; the long-max compacts map-side in
+    codegen and the winner frame is ~key+8B/row. The join is NOT
+    hint-forced to broadcast: a catch-up
     drain over a long backlog can carry tens of millions of distinct
     keys, and a forced broadcast of that would hit Spark's broadcast
     hard limit where a shuffle join completes fine — AQE converts the
@@ -65,11 +65,7 @@ def _compact_changes(batch_df: DataFrame, key_cols: list[str]) -> DataFrame:
                  F.lit("delete")).otherwise(F.lit("upsert")))
              .drop("change_type"))
     cols = [c for c in batch.columns if c != "_change_version"]
-    winners = (batch.groupBy(*key_cols)
-               .agg(F.max("_change_version").alias("_change_version")))
-    return (batch.join(winners, [*key_cols, "_change_version"],
-                       "left_semi")
-            .select(*cols))
+    return latest_by_max(batch, key_cols, "_change_version").select(*cols)
 
 
 class ChangeLogReplicator:

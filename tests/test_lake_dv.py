@@ -170,6 +170,39 @@ def test_dv_compact_folds_masks(spark, tmp_path):
     assert t.count_rows() == len(before)
 
 
+def test_rebucket_of_mor_and_dv_table_equals_prior_read(spark, tmp_path):
+    """rebucket over dv-masked files and mor generations, tombstones
+    included: the rewrite holds exactly the rows read() resolved before
+    it — read() already applies the masks and the read-time LWW, so the
+    rewrite adds no second LWW pass."""
+    from arlas_proc_spark.lake.table import _TOMB
+    t = _base(spark, str(tmp_path / "t"), n=40, n_buckets=4)
+    t.merge_batch(_batch(spark, [(k, 10, f"D{k}", "update")
+                                 for k in range(10)]
+                         + [(k, 10, None, "delete")
+                            for k in range(10, 15)]), "b2", dv=True)
+    t.append_batch(_batch(spark, [(k, 20, f"M{k}", "update")
+                                  for k in (0, 1, 2, 3, 20, 21, 22)]
+                          + [(k, 20, None, "delete") for k in (4, 23, 24)]
+                          + [(5, 5, "stale", "update")]), "m1")
+    t.append_batch(_batch(spark, [(0, 30, "M2", "update"),
+                                  (20, 30, None, "delete"),
+                                  (11, 30, "back", "insert")]), "m2")
+    snap = t.snapshot()
+    assert snap["mor_buckets"] and any(
+        e.get("dv") for b in snap["buckets"] for e in snap["buckets"][b])
+
+    def rows():
+        return sorted((r.k, r.seq, r.v, r[_TOMB])
+                      for r in t.read(with_tombstones=True).collect())
+    before = rows()
+    assert any(r[3] for r in before)
+    t.rebucket(3)
+    snap = t.snapshot()
+    assert snap["n_buckets"] == 3 and not snap["mor_buckets"]
+    assert rows() == before
+
+
 def test_dv_fully_dead_file_unreferenced_and_gc(spark, tmp_path):
     t = _base(spark, str(tmp_path / "t"), n=8, n_buckets=1)
     snap0 = t.snapshot()

@@ -98,6 +98,29 @@ def test_lww_compact_broadcasts_precomputed_winners(spark):
     assert rep["python_udfs"] == 0
 
 
+def test_lww_window_limits_rows_below_its_exchange(spark):
+    """The LWW window kernel plans ``rn == 1`` as a partial
+    WindowGroupLimit below its exchange (each task ships at most one row
+    per key), with no SortAggregate and no Python UDF."""
+    from arlas_proc_spark.lake.lww import latest_by_seq
+    from arlas_proc_spark.sources.changefeed import changefeed_df
+    df = latest_by_seq(changefeed_df(spark, 1000), ["repo", "path"], "seq")
+    rep = plan_report(df)
+    assert rep["sort_aggs"] == 0
+    assert rep["python_udfs"] == 0
+    below_exchange, stack = [], [(df._jdf.queryExecution().executedPlan(),
+                                  False)]
+    while stack:
+        p, below = stack.pop()
+        if p.nodeName() == "Exchange":
+            below = True
+        elif below:
+            below_exchange.append(p.nodeName())
+        stack.extend((k, below) for k in _plan_children(p))
+    assert "WindowGroupLimit" in below_exchange, below_exchange
+    assert "Window" not in below_exchange, below_exchange
+
+
 def test_lsh_queries_never_plan_cartesian(spark):
     """The LSH candidate join must hash-join on (band, sig) — a
     CartesianProduct or BroadcastNestedLoopJoin here would be the exact
@@ -157,15 +180,16 @@ def _capture_data_writes(monkeypatch) -> list:
     return plans
 
 
+def _plan_children(p):
+    if p.nodeName() == "AdaptiveSparkPlan":
+        return [p.executedPlan()]
+    ch = p.children()
+    return [ch.apply(i) for i in range(ch.size())]
+
+
 def _write_plan_shape(plan):
     """(node names above the first exchanges, those exchanges'
     partitionings, every exchange's partitioning in the plan)."""
-    def kids(p):
-        if p.nodeName() == "AdaptiveSparkPlan":
-            return [p.executedPlan()]
-        ch = p.children()
-        return [ch.apply(i) for i in range(ch.size())]
-
     top, frontier, every = [], [], []
     stack = [(plan, True)]
     while stack:
@@ -178,7 +202,7 @@ def _write_plan_shape(plan):
             above = False
         elif above:
             top.append(p.nodeName())
-        stack.extend((k, above) for k in kids(p))
+        stack.extend((k, above) for k in _plan_children(p))
     return top, frontier, every
 
 
